@@ -325,16 +325,17 @@ def release_cache_on_gc(result: DataFrame, cached: DataFrame) -> DataFrame:
     call (minhash signatures, bm25 tf, multimodal pairs) recomputed its
     "persisted" subtree once per downstream branch. The finalizer now
     unpersists only when the LAST result pinning that canonical plan
-    dies.
+    dies. The counter key is the plan's ``semanticHash()``, not its
+    canonical string: plan strings truncate at
+    ``spark.sql.debug.maxToStringFields``, so two distinct wide plans
+    shared one counter and one of their caches leaked.
     """
     import weakref
 
     key = None
     try:
         app = result.sparkSession.sparkContext.applicationId
-        key = app + "\n" + (
-            cached._jdf.queryExecution().logical().canonicalized().toString()
-        )
+        key = f"{app}\n{cached.semanticHash()}"
     except Exception:
         pass  # fall back to an unshared pin (today's behavior)
     if key is None:

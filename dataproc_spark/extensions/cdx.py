@@ -350,8 +350,13 @@ def write_sorted_cdx(
     at gate scale that doubles the (regex-heavy) SURT derivation, at
     cluster scale it is a second full pass over the capture log
     (guide §5 — persist exactly what two passes share; on a real
-    cluster this persist is a checkpoint of the index table)."""
-    index.persist()
+    cluster this persist is a checkpoint of the index table). An index
+    the caller already cached is used as is and stays cached."""
+    from pyspark import StorageLevel
+
+    owned = index.storageLevel == StorageLevel.NONE
+    if owned:
+        index.persist()
     try:
         (
             index.repartitionByRange(n_files, F.col("urlkey"), F.col("ts"))
@@ -359,7 +364,8 @@ def write_sorted_cdx(
             .write.mode("overwrite").parquet(path)
         )
     finally:
-        index.unpersist()
+        if owned:
+            index.unpersist()
 
 
 #: subdirectory holding the ZipNum-style secondary index — the leading

@@ -94,126 +94,6 @@ def shingles(tokens_col: F.Column, n: int = 5) -> F.Column:
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-#: Spark ``XxHash64`` primes (the reference XXH64 constants) — used by
-#: the Arrow MinHash kernel to replay ``xxhash64(shingle, i)``
-#: bit-for-bit from the per-shingle JVM hash (see _minhash_sig_rows)
-_XXH_P1 = 0x9E3779B185EBCA87
-_XXH_P2 = 0xC2B2AE3D27D4EB4F
-_XXH_P3 = 0x165667B19E3779F9
-_XXH_P5 = 0x27D4EB2F165667C5
-
-
-def _minhash_sig_rows(frame: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
-    """Arrow arm of the MinHash signature pass (r16 opt): ONE numpy
-    kernel computes every hash family from the per-shingle JVM hash.
-
-    Spark evaluates ``xxhash64(c1, c2)`` by chaining: the running hash
-    of the previous column becomes the next column's seed. So the
-    family expression ``xxhash64(shingle, i)`` (``i`` an INT literal)
-    factors exactly into ``hashInt(i, seed=xxhash64(shingle))`` — the
-    expensive UTF-8 hash happens ONCE per shingle (a single JVM
-    builtin), and the per-family step is XXH64's 4-byte tail over a
-    long seed: pure 64-bit integer arithmetic, replayed here as
-    vectorized uint64 numpy (verified bit-identical against
-    ``F.xxhash64(s, lit(i))`` — the parity test pins it). The
-    expression arm evaluated ``num_hashes`` interpreted
-    ``array_min(transform(...))`` traversals per row (~35 s CPU at the
-    sf0.1 gate) and its 32-branch tree alone cost ~2.4 s of plan
-    analysis per fresh session (guide §4.2 kernels; §7.3 planning
-    cost).
-
-    ``frame`` carries (id, _shingles, _hs) where ``_hs`` is
-    ``transform(_shingles, s -> xxhash64(s))``; output is
-    (id, _shingles, _sig) — the exact minhash_signature values.
-    ``mapInArrow``, not ``mapInPandas``: the shingle lists pass through
-    as raw Arrow buffers and ``_hs`` flattens straight into numpy —
-    a pandas crossing materialized millions of Python string objects
-    per batch and ate the whole analysis-time win (measured)."""
-    idt = frame.schema[id_col].dataType.simpleString()
-    schema = f"`{id_col}` {idt}, _shingles array<string>, _sig array<bigint>"
-    nh = int(num_hashes)
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        u64 = np.uint64
-        # (i & 0xFFFFFFFF) * PRIME1, precomputed per family
-        fam = (np.arange(nh, dtype=u64) * u64(_XXH_P1)).reshape(1, nh)
-        init = u64((_XXH_P5 + 4) & 0xFFFFFFFFFFFFFFFF)
-        p2, p3 = u64(_XXH_P2), u64(_XXH_P3)
-        r23, r41 = u64(23), u64(41)
-        s33, s29, s32 = u64(33), u64(29), u64(32)
-
-        def sig_block(flat_i64, offs):
-            # hashInt(i, seed) for every (shingle, family): XXH64 4-byte
-            # tail + avalanche, all uint64 (numpy wraps like the JVM)
-            h = flat_i64.view(u64)[:, None] + init
-            h = h ^ fam
-            h = ((h << r23) | (h >> r41)) * p2 + p3
-            h ^= h >> s33
-            h *= p2
-            h ^= h >> s29
-            h *= p3
-            h ^= h >> s32
-            # signed min per document == array_min over BIGINT
-            return np.minimum.reduceat(h.view(np.int64), offs, axis=0)
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            hs = batch.column(batch.schema.get_field_index("_hs"))
-            lens = pc.list_value_length(hs).to_numpy().astype(np.int64)
-            if (lens == 0).any():
-                # unreachable via minhash_frame (the token filter
-                # guarantees >= 1 shingle) — fail loudly, the expr arm
-                # would emit an all-NULL signature here
-                raise ValueError(
-                    "minhash signature kernel: empty shingle set"
-                )
-            flat_all = pc.list_flatten(hs).to_numpy().astype(
-                np.int64, copy=False
-            )
-            ends = np.cumsum(lens)
-            sig = np.empty((n, nh), dtype=np.int64)
-            # block rows so the (shingles, families) matrix stays ~32 MB
-            # however large a batch gets
-            max_flat = max(1, (4 << 20) // nh)
-            start = 0
-            row0 = 0
-            while row0 < n:
-                row1 = int(
-                    np.searchsorted(ends, start + max_flat, side="right")
-                )
-                row1 = max(row1, row0 + 1)
-                stop = int(ends[row1 - 1])
-                offs = np.zeros(row1 - row0, dtype=np.int64)
-                np.cumsum(lens[row0:row1][:-1], out=offs[1:])
-                sig[row0:row1] = sig_block(flat_all[start:stop], offs)
-                start, row0 = stop, row1
-            sig_arr = pa.ListArray.from_arrays(
-                pa.array(
-                    np.arange(0, (n + 1) * nh, nh, dtype=np.int64),
-                    type=pa.int32(),
-                ),
-                pa.array(sig.ravel(), type=pa.int64()),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(batch.schema.get_field_index(id_col)),
-                    batch.column(
-                        batch.schema.get_field_index("_shingles")
-                    ),
-                    sig_arr,
-                ],
-                [id_col, "_shingles", "_sig"],
-            )
-
-    return frame.mapInArrow(gen, schema)
-
-
 def minhash_signature(shingles_col: F.Column, num_hashes: int = 64) -> F.Column:
     """MinHash signature: per hash function i, min over shingles of
     ``xxhash64(shingle, i)``.
@@ -277,7 +157,6 @@ def minhash_frame(
     num_hashes: int = 64,
     shingle_size: int = 5,
     portable: bool = False,
-    impl: str = "expr",
 ) -> DataFrame:
     """(id, shingles, signature) frame — the input to LSH banding.
 
@@ -285,24 +164,10 @@ def minhash_frame(
     excluded: they have no content signal, their all-null signatures would
     all collide into one LSH bucket, and their Jaccard is undefined (0/0).
 
-    ``impl`` selects the xxhash64-family signature arm (r16 opt):
-    ``'arrow'`` hashes each shingle once in the JVM and computes every
-    family in one numpy kernel (:func:`_minhash_sig_rows` —
-    bit-identical values, parity-pinned); ``'expr'`` (default) keeps
-    the pure-expression plan. The default was MEASURED per scale, not
-    per gate: arrow wins ~1 s at the sf0.1 gate (plan-analysis cost of
-    the 32-branch tree), but at the 10× probe the full pairs pipeline
-    read 13-28 s under arrow vs 4-13 s under expr (the persisted
-    kernel output is opaque — any consumer stage that races or misses
-    the cache re-pays the whole kernel plus the Arrow crossing, and
-    repeated kernel batches grow Python-worker RSS across a session),
-    so the scale-robust expression arm stays the default (guide §1 —
-    revert what loses on the measured path). The portable (md5) family
-    is expression-only — its per-family hash is a string digest, not
-    integer arithmetic.
+    The signature is the pure-expression plan: at the 10× probe the full
+    pairs pipeline read 4-13 s with it vs 13-28 s with a hash-once Arrow
+    kernel (r16).
     """
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"minhash_frame: unknown impl {impl!r}")
     toks = tokens(content_col)
     # guard on the cheap token count, NOT on size(_shingles): Catalyst
     # pushes the filter below the projection, and a shingle-based predicate
@@ -311,13 +176,8 @@ def minhash_frame(
     filtered = df.where(F.size(toks) >= shingle_size)
     sh = shingles(tokens(content_col), shingle_size).alias("_shingles")
     out = filtered.select(F.col(id_col), sh)
-    if portable or impl == "expr":
-        sig_fn = minhash_signature_portable if portable else minhash_signature
-        return out.withColumn("_sig", sig_fn(F.col("_shingles"), num_hashes))
-    hs = out.withColumn(
-        "_hs", F.transform(F.col("_shingles"), lambda s: F.xxhash64(s))
-    )
-    return _minhash_sig_rows(hs, id_col, num_hashes)
+    sig_fn = minhash_signature_portable if portable else minhash_signature
+    return out.withColumn("_sig", sig_fn(F.col("_shingles"), num_hashes))
 
 
 def band_rows(
@@ -1225,28 +1085,21 @@ def _banded_hamming_arrow(
     banded: DataFrame,
     id_col: str,
     fp_col: str,
-    words: int,
     bands: int,
     band_bits: int,
     per_word: int,
     mask: int,
     max_hamming: int,
 ) -> DataFrame:
-    """Grouped-kernel arm of the banded Hamming cores (r15 opt round 2):
-    ONE groupBy-(band, bval) Arrow stage — each bucket's candidate set
-    is evaluated as vectorized numpy (band-value matrix, first-colliding
-    band via bool argmax, XOR + byte-LUT popcount) instead of per-
-    candidate codegen rows through a bands-arm CASE join condition. The
-    relational self-join arm evaluated the 16-arm first-collision CASE
-    plus the multi-word bit_count for EVERY join match (~7M candidate
-    rows ≈ 8 s at the sf0.1 image_dedup_256 gate; this kernel ≈ 1 s).
-    Bit-exact by construction: numpy int64 ``>>``/``&`` are the JVM's
-    arithmetic shift + mask, argmax-over-bool is the CASE's first
-    match, popcount is exact, and the ``id_a < id_b`` mask is the join
-    predicate. Same one-bucket-one-task contract as
-    ``simsearch.near_dup_pairs`` — the band-width parameter law governs
-    bucket sizes (SCALE.md); the ``impl='expr'`` join arm remains for
-    skew-pathological corpora (AQE skew split applies to joins only)."""
+    """Candidate evaluation of :func:`banded_hamming_pairs_multi`: ONE
+    groupBy-(band, bval) Arrow stage — each bucket's candidate set is
+    evaluated as vectorized numpy (band-value matrix, first-colliding
+    band via bool argmax, XOR + byte-LUT popcount). Bit-exact by
+    construction: numpy int64 ``>>``/``&`` are the JVM's arithmetic
+    shift + mask, argmax-over-bool picks the first colliding band,
+    popcount is exact, and ``id_a < id_b`` emits each pair once. Same
+    one-bucket-one-task contract as ``simsearch.near_dup_pairs`` — the
+    band-width parameter law governs bucket sizes (SCALE.md)."""
     import numpy as np
     import pandas as pd
 
@@ -1263,10 +1116,7 @@ def _banded_hamming_arrow(
                 {"id_a": [], "id_b": [], "hamming": []}
             ).astype({"hamming": "int32"})
         ids = pdf[id_col].to_numpy()
-        if words == 1:
-            fp = pdf[fp_col].to_numpy(dtype=np.int64).reshape(n, 1)
-        else:
-            fp = np.array(pdf[fp_col].tolist(), dtype=np.int64)
+        fp = np.array(pdf[fp_col].tolist(), dtype=np.int64)
         band = int(pdf["band"].iloc[0])
         bvals = np.empty((n, bands), dtype=np.int64)
         for b in range(bands):
@@ -1317,7 +1167,6 @@ def banded_hamming_pairs(
     bits: int = 64,
     bands: int = 8,
     max_hamming: int = 7,
-    impl: str = "expr",
 ) -> DataFrame:
     """Near pairs by Hamming distance over ANY integer fingerprint
     frame — the band-bucket-verify core extracted from
@@ -1329,22 +1178,10 @@ def banded_hamming_pairs(
 
     100 TB plan: ids only ever meet on a colliding band value — the
     candidate exchange is a hash shuffle on (band, bval), never
-    all-pairs. ``impl='expr'`` (default) is the relational self-join +
-    ``bit_count(xor)`` plan: for SINGLE-word fingerprints the measured
-    winner (same-session A/B at the sf0.1 audio gate: 0.7 s expr vs
-    3.0 s kernel — per-candidate codegen cost is one CASE over longs +
-    one bit_count, while the grouped kernel pays the pair set back
-    through Arrow), and the arm AQE skew-split protects. ``'arrow'``
-    evaluates each bucket in one grouped numpy kernel
-    (:func:`_banded_hamming_arrow`) — the multi-word core's default,
-    where per-candidate expression cost is 4-8× higher and the kernel
-    wins 4×; parity-pinned by test. Callers own persistence of ``fps``
-    (referenced twice by the expr self-join)."""
-    if impl not in ("arrow", "expr"):
-        raise ValueError(
-            f"banded_hamming_pairs: impl must be 'arrow' or 'expr', "
-            f"got {impl!r}"
-        )
+    all-pairs. Candidates are evaluated by a relational self-join +
+    ``bit_count(xor)``: for single-word fingerprints it beat the grouped
+    numpy kernel 0.7 s vs 3.0 s at the sf0.1 audio gate (r15). Callers
+    own persistence of ``fps`` (referenced twice by the self-join)."""
     if max_hamming > bands - 1:
         raise ValueError(
             f"max_hamming={max_hamming} exceeds the pigeonhole guarantee "
@@ -1375,15 +1212,6 @@ def banded_hamming_pairs(
             )
         ).alias("bb"),
     ).select(id_col, fp_col, "bb.band", "bb.bval")
-    if impl == "arrow":
-        # a NULL fp row never pairs in the expr arm (NULL bval never
-        # equi-joins, NULL hamming fails <=) — drop it BEFORE grouping,
-        # because groupBy would bucket NULL bvals TOGETHER
-        return _banded_hamming_arrow(
-            banded.where(F.col(fp_col).isNotNull()),
-            id_col, fp_col, 1, bands, band_bits, bands, mask,
-            max_hamming,
-        )
     l, r = banded.alias("l"), banded.alias("r")
     lfp, rfp = F.col(f"l.{fp_col}"), F.col(f"r.{fp_col}")
     # emit each pair from its FIRST colliding band only: a pair whose
@@ -1420,7 +1248,6 @@ def banded_hamming_pairs_multi(
     words: int = 4,
     bands: int = 16,
     max_hamming: int = 15,
-    impl: str = "arrow",
 ) -> DataFrame:
     """:func:`banded_hamming_pairs` over MULTI-WORD fingerprints —
     ``fp_col`` is ``array<long>`` of ``words`` 64-bit words (bit ``i``
@@ -1437,17 +1264,10 @@ def banded_hamming_pairs_multi(
     BITS, not more bands on 64 — at 256/16 each band still has 2^16
     values (the flat-probe regime) while the pigeonhole covers
     ``max_hamming`` up to 15. Shuffle carries (id, 32-byte array)
-    rows. ``impl='arrow'`` (default, r15 opt round 2) evaluates each
-    bucket in ONE grouped numpy kernel (:func:`_banded_hamming_arrow`
-    — the measured 8 s → 1 s candidate-evaluation rewrite at the sf0.1
-    gate); ``impl='expr'`` keeps the self-join + per-word ``bit_count``
-    plan (parity-pinned; the AQE-skew-split arm). Callers own
-    persistence of ``fps`` (self-joined by the expr arm)."""
-    if impl not in ("arrow", "expr"):
-        raise ValueError(
-            f"banded_hamming_pairs_multi: impl must be 'arrow' or "
-            f"'expr', got {impl!r}"
-        )
+    rows. Each bucket is evaluated in ONE grouped numpy kernel
+    (:func:`_banded_hamming_arrow`): it beat a self-join + per-word
+    ``bit_count`` plan 8 s → 1 s at the sf0.1 image_dedup_256 gate and
+    697 s → 33 s at 10× (r15)."""
     bits = 64 * words
     if max_hamming > bands - 1:
         raise ValueError(
@@ -1473,12 +1293,10 @@ def banded_hamming_pairs_multi(
             (b % per_word) * band_bits,
         ).bitwiseAND(F.lit(mask))
 
-    # reject wrong-LENGTH fingerprints in BOTH arms identically: ANSI
-    # element_at already raises on too-short arrays, but an array
-    # LONGER than `words` slipped through — the expr arm summed
-    # bit_count over exactly `words` elements while the kernel's
-    # popcount covered every word present (result drift), and MIXED
-    # over-length arrays crashed np.array inside the kernel (r15
+    # reject wrong-LENGTH fingerprints: ANSI element_at already raises
+    # on too-short arrays, but an array LONGER than `words` slipped
+    # through — the kernel's popcount covered every word present, and
+    # MIXED over-length arrays crashed np.array inside the kernel (r15
     # ADVICE finding). NULL fingerprints stay legal (they never pair).
     fp_checked = F.when(
         F.col(fp_col).isNull() | (F.size(F.col(fp_col)) == words),
@@ -1506,57 +1324,17 @@ def banded_hamming_pairs_multi(
             )
         ).alias("bb"),
     ).select(id_col, fp_col, "bb.band", "bb.bval")
-    if impl == "arrow":
-        # rows whose fingerprint is NULL or carries a NULL word never
-        # emit a pair in the expr arm (NULL bval never equi-joins; the
-        # XOR'd hamming goes NULL and fails <=) — drop them BEFORE
-        # grouping for the same output, since groupBy would bucket NULL
-        # bvals together and the kernel needs an int matrix.
-        # Wrong-LENGTH arrays raise in the shared banding projection
-        # (the explicit size guard above — ANSI element_at alone let
-        # OVER-length arrays through) in both arms — caller error.
-        clean = banded.where(
-            F.col(fp_col).isNotNull()
-            & ~F.exists(fp_col, lambda x: x.isNull())
-        )
-        return _banded_hamming_arrow(
-            clean, id_col, fp_col, words, bands, band_bits, per_word,
-            mask, max_hamming,
-        )
-    l, r = banded.alias("l"), banded.alias("r")
-    lfp, rfp = F.col(f"l.{fp_col}"), F.col(f"r.{fp_col}")
-    # flat per-word bit_count sum instead of a zip_with/aggregate fold:
-    # higher-order lambdas run on Spark's interpreted path per candidate
-    # row (allocating a distance array each time), while this unrolled
-    # sum is plain whole-stage-codegen integer work (r15 opt, guide
-    # §4.1 — prefer built-in expression forms the codegen can compile)
-    ham = F.bit_count(
-        F.element_at(lfp, 1).bitwiseXOR(F.element_at(rfp, 1))
-    ).cast("int")
-    for w in range(1, words):
-        ham = ham + F.bit_count(
-            F.element_at(lfp, w + 1).bitwiseXOR(F.element_at(rfp, w + 1))
-        ).cast("int")
-    # first-colliding-band filter replacing .distinct() — same
-    # rationale as :func:`banded_hamming_pairs`: one output row per
-    # pair at join time, no dedup Exchange, no duplicate hamming evals
-    first_coll = F.when(bval_of(lfp, 0) == bval_of(rfp, 0), 0)
-    for b in range(1, bands):
-        first_coll = first_coll.when(bval_of(lfp, b) == bval_of(rfp, b), b)
-    pairs = l.join(
-        r,
-        [
-            F.col("l.band") == F.col("r.band"),
-            F.col("l.bval") == F.col("r.bval"),
-            F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-            F.col("l.band") == first_coll,
-        ],
-    ).select(
-        F.col(f"l.{id_col}").alias("id_a"),
-        F.col(f"r.{id_col}").alias("id_b"),
-        ham.alias("hamming"),
+    # rows whose fingerprint is NULL or carries a NULL word never pair —
+    # drop them BEFORE grouping, since groupBy would bucket NULL bvals
+    # together and the kernel needs an int matrix
+    clean = banded.where(
+        F.col(fp_col).isNotNull()
+        & ~F.exists(fp_col, lambda x: x.isNull())
     )
-    return pairs.where(F.col("hamming") <= max_hamming)
+    return _banded_hamming_arrow(
+        clean, id_col, fp_col, bands, band_bits, per_word, mask,
+        max_hamming,
+    )
 
 
 def ngram_containment_pairs(

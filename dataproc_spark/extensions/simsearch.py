@@ -515,7 +515,6 @@ def near_dup_pairs(
     vec_col: str = "embedding",
     bucket_col: str = "label",
     scale: int = 1000,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Embedding near-duplicate pairs within a coarse bucket.
 
@@ -524,29 +523,18 @@ def near_dup_pairs(
     the all-pairs cliff at scale; recall is traded per the coarse
     quantizer's quality, exactly as in IVF dedup pipelines.
 
-    ``impl='arrow'`` (default, r15 opt): ONE groupBy-bucket Arrow stage
-    — each bucket's vectors are gathered once and all pairwise dots
-    come out of an exact-int64 blocked numpy matmul. The previous
-    self-join shape shuffled every vector TWICE (both join sides) and
-    paid an interpreted zip_with/aggregate fold per candidate pair
-    (~16M lambda evals at the sf0.1 gate — measured 5.5 s vs ~0.6 s
-    for the kernel; the bpe_apply/rp_lsh expr-vs-Arrow lesson, guide
-    §4.2). Block size bounds the dot matrix to ~32 MB however large a
-    bucket gets; a bucket must still FIT one task — that is the k knob,
-    exactly as in the join shape where one bucket was one hash cell.
-    ``impl='expr'`` keeps the relational self-join plan (the oracle's
-    replay shape; parity-pinned by test).
+    ONE groupBy-bucket Arrow stage: each bucket's vectors are gathered
+    once and all pairwise dots come out of an exact-int64 blocked numpy
+    matmul (0.6 s vs 5.5 s for a relational self-join at the sf0.1 gate,
+    r15). Block size bounds the dot matrix to ~32 MB however large a
+    bucket gets; a bucket must still FIT one task — that is the k knob.
 
     NULL ids, buckets, or vector elements raise: each would silently
-    escape detection (a NULL bucket never equi-joins, a NULL id fails
-    ``id_a < id_b``, a NULL element nulls the verify dot) — the same
+    escape detection (a NULL bucket is no real bucket, a NULL id cannot
+    order a pair, a NULL element has no dot) — the same
     silent-corpus-escape policy as :func:`rp_lsh_near_dup`. Pre-filter
     unlabeled rows explicitly if that is intended.
     """
-    if impl not in ("arrow", "expr"):
-        raise ValueError(
-            f"near_dup_pairs: impl must be 'arrow' or 'expr', got {impl!r}"
-        )
 
     def _req(c: F.Column, what: str) -> F.Column:
         return F.when(c.isNotNull(), c).otherwise(
@@ -559,11 +547,9 @@ def near_dup_pairs(
             )
         )
 
-    # the Arrow path skips _spread: groupBy supplies the (only)
-    # exchange, so a pre-spread would just add a second shuffle of the
-    # same vectors
-    spread = embeddings if impl == "arrow" else _spread(embeddings)
-    e = spread.select(
+    # no _spread: groupBy supplies the (only) exchange, so a pre-spread
+    # would just add a second shuffle of the same vectors
+    e = embeddings.select(
         _req(F.col(id_col), id_col).alias(id_col),
         _req(F.col(bucket_col), bucket_col).alias("_b"),
         F.when(
@@ -581,58 +567,44 @@ def near_dup_pairs(
         )
         .alias("_v"),
     )
-    if impl == "arrow":
-        import numpy as np
-        import pandas as pd
 
-        idt = e.schema[id_col].dataType.simpleString()
-        thr = int(threshold_dot_q)
+    import numpy as np
+    import pandas as pd
 
-        def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            n = len(pdf)
-            if n < 2:
-                return pd.DataFrame(
-                    {"id_a": [], "id_b": [], "dot_q": []}
-                ).astype({"dot_q": "int64"})
-            ids = pdf[id_col].to_numpy()
-            v = np.array(pdf["_v"].tolist(), dtype=np.int64)
-            # block rows so the (B, n) dot matrix stays ~32 MB
-            # regardless of bucket size
-            blk = max(1, (1 << 22) // max(n, 1))
-            outs = []
-            for s in range(0, n, blk):
-                g = v[s:s + blk] @ v.T
-                ii, jj = np.nonzero(
-                    (g >= thr) & (ids[None, :] > ids[s:s + blk, None])
-                )
-                if len(ii):
-                    outs.append((ids[s + ii], ids[jj], g[ii, jj]))
-            if not outs:
-                return pd.DataFrame(
-                    {"id_a": [], "id_b": [], "dot_q": []}
-                ).astype({"dot_q": "int64"})
-            return pd.DataFrame({
-                "id_a": np.concatenate([o[0] for o in outs]),
-                "id_b": np.concatenate([o[1] for o in outs]),
-                "dot_q": np.concatenate([o[2] for o in outs]),
-            })
+    idt = e.schema[id_col].dataType.simpleString()
+    thr = int(threshold_dot_q)
 
-        return e.groupBy("_b").applyInPandas(
-            kernel, schema=f"id_a {idt}, id_b {idt}, dot_q long"
-        )
-    a, b = e.alias("a"), e.alias("b")
-    return (
-        a.join(
-            b,
-            [F.col("a._b") == F.col("b._b"),
-             F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            dot_q(F.col("a._v"), F.col("b._v")).alias("dot_q"),
-        )
-        .where(F.col("dot_q") >= threshold_dot_q)
+    def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        n = len(pdf)
+        if n < 2:
+            return pd.DataFrame(
+                {"id_a": [], "id_b": [], "dot_q": []}
+            ).astype({"dot_q": "int64"})
+        ids = pdf[id_col].to_numpy()
+        v = np.array(pdf["_v"].tolist(), dtype=np.int64)
+        # block rows so the (B, n) dot matrix stays ~32 MB
+        # regardless of bucket size
+        blk = max(1, (1 << 22) // max(n, 1))
+        outs = []
+        for s in range(0, n, blk):
+            g = v[s:s + blk] @ v.T
+            ii, jj = np.nonzero(
+                (g >= thr) & (ids[None, :] > ids[s:s + blk, None])
+            )
+            if len(ii):
+                outs.append((ids[s + ii], ids[jj], g[ii, jj]))
+        if not outs:
+            return pd.DataFrame(
+                {"id_a": [], "id_b": [], "dot_q": []}
+            ).astype({"dot_q": "int64"})
+        return pd.DataFrame({
+            "id_a": np.concatenate([o[0] for o in outs]),
+            "id_b": np.concatenate([o[1] for o in outs]),
+            "dot_q": np.concatenate([o[2] for o in outs]),
+        })
+
+    return e.groupBy("_b").applyInPandas(
+        kernel, schema=f"id_a {idt}, id_b {idt}, dot_q long"
     )
 
 
@@ -657,24 +629,14 @@ def rp_planes(n_planes: int, dim: int, seed: str = "rp") -> list[list[int]]:
     ]
 
 
-# Expression-path signatures build n_planes aggregate/zip_with nodes over
-# dim-element literal arrays; the Arrow kernel wins at EVERY measured
-# point — 3.3 s vs 4.9 s at 16 planes/sf0.01, 3.5 s vs 6.5 s at
-# 16/sf0.1, 2.9 s vs 16.5 s at 64 planes (SCALE.md §rp-lsh, the same
-# expr-vs-Arrow lesson as bpe_apply) — so 'auto' always routes to Arrow.
-# The expr path is an explicit opt-in for relational-plan replay (the
-# oracle's shape) and stays parity-tested against the kernel.
-RP_EXPR_MAX_PLANES = 0
-
-
 def _rp_banded_arrow(
     e: DataFrame, planes: list[list[int]], band_bits: int, id_col: str
 ) -> DataFrame:
-    """Arrow signature path: one numpy matmul per batch (B×dim @ dim×P)
-    computes every sign bit at once, then band keys via a power-of-two
-    weight vector — constant plan size regardless of n_planes. Exact
-    integer arithmetic (int64 throughout), bit-identical to the
-    expression path (parity-tested)."""
+    """Signature stage of :func:`rp_lsh_near_dup`: one numpy matmul per
+    batch (B×dim @ dim×P) computes every sign bit at once, then band
+    keys via a power-of-two weight vector — constant plan size
+    regardless of n_planes. Exact integer arithmetic (int64
+    throughout)."""
     import numpy as np
     import pandas as pd
 
@@ -715,20 +677,21 @@ def rp_lsh_near_dup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 1000,
-    signature_impl: str = "auto",
 ) -> DataFrame:
     """Embedding near-dup pairs WITHOUT a pre-existing bucket column:
     random-hyperplane LSH. :func:`near_dup_pairs` needs a coarse label to
     stay off the all-pairs cliff; this is the self-contained scale path
     when no such label exists (the common case for a fresh crawl).
 
-    Stages, all relational:
+    Stages:
 
     1. **Signature** (map-only): each vector's bit ``p`` is
-       ``sign(<v, plane_p>)`` against the ±1 plane literals from
+       ``sign(<v, plane_p>)`` against the ±1 planes from
        :func:`rp_planes` — integer dots on the quantized vector, computed
-       as plan-literal ``aggregate``/``zip_with`` expressions exactly like
-       the k-means centroids; no dim explosion, no shuffle.
+       by one numpy matmul per Arrow batch (:func:`_rp_banded_arrow`; it
+       beat plan-literal ``aggregate``/``zip_with`` expressions at every
+       probed point, up to 2.9 s vs 16.5 s at 64 planes — SCALE.md
+       §rp-lsh); no dim explosion, no shuffle.
     2. **Banding**: ``n_planes / band_bits`` band keys (each the integer
        value of ``band_bits`` consecutive bits); explode to one row per
        band and self equi-join on (band_idx, band_key), ``id_a < id_b``,
@@ -744,14 +707,7 @@ def rp_lsh_near_dup(
     vectors), so recall is a banding choice, not an accident — the same
     contract as ``minhash_dedup_pairs``. Wrong-length, NULL, or
     NULL-element vectors raise (they would otherwise null out the band
-    keys and silently escape detection).
-
-    ``signature_impl`` picks the stage-1 kernel: ``'arrow'`` (one numpy
-    matmul per batch — constant plan size; measured faster at every
-    probed plane count and corpus size, so ``'auto'`` always picks it),
-    or ``'expr'`` (plan-literal aggregate expressions — the explicit
-    opt-in that mirrors the oracle's relational shape). Both are exact
-    int64 and bit-identical (parity-tested)."""
+    keys and silently escape detection)."""
     if band_bits < 1:
         raise ValueError("band_bits must be >= 1")
     if n_planes % band_bits:
@@ -759,19 +715,10 @@ def rp_lsh_near_dup(
             f"band_bits ({band_bits}) must divide n_planes ({n_planes}); "
             "a remainder would silently drop the trailing bits from banding"
         )
-    if signature_impl not in ("auto", "expr", "arrow"):
-        raise ValueError(
-            f"signature_impl must be 'auto', 'expr', or 'arrow', "
-            f"got {signature_impl!r}"
-        )
-    if signature_impl == "auto":
-        signature_impl = "expr" if n_planes <= RP_EXPR_MAX_PLANES else "arrow"
     planes = rp_planes(n_planes, dim, seed)
-    n_bands = n_planes // band_bits
 
-    # a NULL vector or a NULL element would otherwise null the band keys
-    # (expr path: the row silently never collides) or NaN-cast to garbage
-    # keys (arrow path) — both are silent corpus escapes, so raise instead
+    # a NULL vector or a NULL element would otherwise NaN-cast to garbage
+    # band keys — a silent corpus escape, so raise instead
     vec_ok = (F.size(F.col(vec_col)) == dim) & ~F.exists(
         F.col(vec_col), lambda x: x.isNull()
     )
@@ -799,40 +746,7 @@ def rp_lsh_near_dup(
     # minhash signature table)
     e = e.persist()
 
-    if signature_impl == "arrow":
-        banded = _rp_banded_arrow(e, planes, band_bits, id_col)
-    else:
-
-        def plane_bit(p: int) -> F.Column:
-            lit = F.array(*[F.lit(int(c)).cast("long") for c in planes[p]])
-            return (dot_q(F.col("_v"), lit) >= 0).cast("int")
-
-        bits = e.select(
-            F.col(id_col),
-            *[plane_bit(p).alias(f"_b{p}") for p in range(n_planes)],
-        )
-
-        def band_key(j: int) -> F.Column:
-            k = F.lit(0)
-            for t in range(band_bits):
-                k = k * 2 + F.col(f"_b{j * band_bits + t}")
-            return k
-
-        banded = bits.select(
-            F.col(id_col),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("band_idx"),
-                            band_key(j).cast("bigint").alias("band_key"),
-                        )
-                        for j in range(n_bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select(id_col, "bb.band_idx", "bb.band_key")
-
+    banded = _rp_banded_arrow(e, planes, band_bits, id_col)
     left = banded.alias("l")
     right = banded.alias("r")
     cands = (
@@ -1545,16 +1459,10 @@ def semantic_dedup(
 # r15: Product Quantization — compressed embeddings + ADC search
 # --------------------------------------------------------------------------
 
-def _pq_slice(vec: F.Column, sub: int, subdim: int) -> F.Column:
-    """Subvector ``sub`` of a quantized vector (1-based slice)."""
-    return F.slice(vec, sub * subdim + 1, subdim)
-
-
 def _pq_guard_dim(q: DataFrame, dim: int, who: str) -> DataFrame:
     """Re-project ``_v`` with the embed_kmeans raise policy: a NULL or
-    wrong-length vector must fail loudly — in the expression path a
-    NULL distance would silently win the struct-min, and in the Arrow
-    path numpy would die with an opaque ragged-array error."""
+    wrong-length vector must fail loudly — numpy would otherwise die
+    with an opaque ragged-array error inside the kernel."""
     other = [c for c in q.columns if c != "_v"]
     return q.select(
         *other,
@@ -1569,38 +1477,14 @@ def _pq_guard_dim(q: DataFrame, dim: int, who: str) -> DataFrame:
     )
 
 
-def _pq_nearest_code(sv: F.Column, codebooks: list, sub: int) -> F.Column:
-    """Nearest-code expression for one ALREADY-SLICED subvector against
-    the literal codebook: argmin squared L2, ties → smallest code (the
-    ``_kmeans_assign`` struct-min convention)."""
-    cands = []
-    for s, code, c in codebooks:
-        if s != sub:
-            continue
-        lit = F.array(*[F.lit(int(x)).cast("long") for x in c])
-        d = F.aggregate(
-            F.zip_with(sv, lit, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        cands.append(F.struct(d.alias("d"), F.lit(int(code)).alias("code")))
-    return F.array_min(F.array(*cands))["code"]
-
-
 def _pq_codes_arrow(
     q: DataFrame, codebooks: list, m: int, subdim: int, id_col: str,
-    carry_v: bool = False,
 ) -> DataFrame:
     """(id, ``_v``) → (id, ``codes`` array<int>) via ONE Arrow stage:
     per subspace, the squared-L2 matrix ``||x||² − 2xCᵀ + ||c||²`` in
     exact int64 with numpy, argmin taking the FIRST minimum — the
     codebook rows are code-ascending, so ties break to the smallest
-    code, bit-identical to the expression path's (dist, code)
-    struct-min (parity-pinned by test). The expression path compiles
-    m × codes zip_with aggregates into one giant codegen unit
-    (measured ~14s of compile at the default 8×16 geometry — the
-    rp_lsh_near_dup lesson); the matmul kernel is the production
-    default for exactly the reason the signature kernel is there."""
+    code."""
     import numpy as np
     import pandas as pd
 
@@ -1622,17 +1506,9 @@ def _pq_codes_arrow(
                 d = ((xs * xs).sum(axis=1, keepdims=True)
                      - 2 * (xs @ cmat.T) + cnorm)
                 out[:, sub] = codes_arr[np.argmin(d, axis=1)]
-            cols = {id_col: pdf[id_col], "codes": list(out)}
-            if carry_v:
-                # training reuses the quantized vector for the centroid
-                # update — carrying it through the kernel avoids a
-                # corpus self-join per iteration
-                cols["_v"] = pdf["_v"]
-            yield pd.DataFrame(cols)
+            yield pd.DataFrame({id_col: pdf[id_col], "codes": list(out)})
 
-    schema = f"{id_col} long, codes array<int>" + (
-        ", _v array<long>" if carry_v else "")
-    return q.mapInPandas(kernel, schema)
+    return q.mapInPandas(kernel, f"{id_col} long, codes array<int>")
 
 
 def _pq_iter_update(
@@ -1703,7 +1579,6 @@ def pq_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 1000,
-    impl: str = "arrow",
     seed: list | None = None,
 ) -> list:
     """Train Product-Quantization codebooks (Jégou et al. 2011,
@@ -1726,17 +1601,14 @@ def pq_train(
     — driver-side small (m × codes × dim/m longs = dim × codes, same
     O as one k-means centroid table) for reuse as plan literals.
 
-    100 TB plan: training is ``iters`` passes of ONE (sub, code, dim)
-    aggregation with map-side combine over the sub-exploded corpus —
-    never a shuffle of vectors by similarity; the codebook travels to
-    executors either as an Arrow-kernel closure (``impl='arrow'``, the
-    default — one matmul stage, no codegen blow-up) or as plan
-    literals (``impl='expr'``, the :func:`embed_kmeans` shape — kept
-    as the all-JVM arm and parity-pinned against the kernel)."""
+    100 TB plan: each of the ``iters`` Lloyd rounds is ONE map-only
+    Arrow job (:func:`_pq_iter_update`) whose per-partition (sub, code)
+    partial sums combine driver-side — never a shuffle of vectors by
+    similarity; the codebook travels to executors as a kernel closure.
+    The fused kernels replaced a plan-literal CASE-chain arm: ann_pq
+    9.3 → 7.4 s, pq_recall 6.7 → 3.3 s (OPTIMIZATION_r15.md)."""
     if m < 1 or codes < 1:
         raise ValueError(f"pq_train: m ({m}) and codes ({codes}) must be >= 1")
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"pq_train: impl must be 'arrow' or 'expr', got {impl!r}")
     q = _spread_vectors(embeddings).select(
         F.col(id_col), quantize(vec_col, scale).alias("_v")
     )
@@ -1773,45 +1645,10 @@ def pq_train(
         for i, (_, v) in enumerate(seed)
     ]
     for _ in range(iters):
-        if impl == "arrow":
-            # fused assign+partials kernel (r15 opt round 2): one
-            # map-only job per round; see _pq_iter_update
-            comb = _pq_iter_update(q, codebooks, m, subdim)
-            codebooks = sorted(
-                (sub, code, [_trunc_div(x, n) for x in s])
-                for (sub, code), (n, s) in comb.items()
-            )
-            continue
-        else:
-            # per-sub argmin over that sub's codebook, built as ONE CASE
-            # chain so the whole assignment stays a single map-only
-            # projection over the exploded rows
-            spread = q.select(
-                F.col(id_col),
-                F.explode(F.array(*[
-                    F.struct(F.lit(sub).alias("sub"),
-                             _pq_slice(F.col("_v"), sub, subdim).alias("sv"))
-                    for sub in range(m)
-                ])).alias("e"),
-            ).select(id_col, "e.sub", "e.sv")
-            case = None
-            for sub in range(m):
-                sub_code = _pq_nearest_code(F.col("sv"), codebooks, sub)
-                case = F.when(F.col("sub") == sub, sub_code) if case is None \
-                    else case.when(F.col("sub") == sub, sub_code)
-            exploded = spread.withColumn("code", case)
-        # one-exchange update (r15 opt): count + per-dim sums per
-        # (sub, code) with map-side combine — no posexplode row ×subdim
-        # blowup, no second collect_list exchange; driver _trunc_div
-        # replicates `s div n` bit-for-bit
-        rows = _mean_update_rows(exploded, ["sub", "code"], "sv", subdim)
+        comb = _pq_iter_update(q, codebooks, m, subdim)
         codebooks = sorted(
-            (
-                r["sub"],
-                r["code"],
-                [_trunc_div(r[f"_s{i}"], r["_n"]) for i in range(subdim)],
-            )
-            for r in rows
+            (sub, code, [_trunc_div(x, n) for x in s])
+            for (sub, code), (n, s) in comb.items()
         )
     q.unpersist()
     return codebooks
@@ -1823,35 +1660,21 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 1000,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Compress every vector to its ``m`` PQ codes — ``(id, codes
     array<int>)``, the m-byte row a 100 TB vector store actually keeps
     hot (the full-precision vectors stay in cold storage for optional
-    re-ranking). Map-only either way: ``impl='arrow'`` (default) is
-    one matmul kernel stage, ``impl='expr'`` the all-JVM literal
-    plan (parity-pinned); the scan never shuffles, and at the default
-    geometry the output is ~32× smaller than the input column."""
+    re-ranking). One map-only matmul kernel stage
+    (:func:`_pq_codes_arrow`); the scan never shuffles, and at the
+    default geometry the output is ~32× smaller than the input column."""
     m, subdim = _pq_geometry(codebooks)
-    if impl not in ("arrow", "expr"):
-        raise ValueError(
-            f"pq_encode: impl must be 'arrow' or 'expr', got {impl!r}")
     q = _pq_guard_dim(
         _spread_vectors(embeddings).select(
             F.col(id_col), quantize(vec_col, scale).alias("_v")
         ),
         m * subdim, "pq_encode",
     )
-    if impl == "arrow":
-        return _pq_codes_arrow(q, codebooks, m, subdim, id_col)
-    return q.select(
-        F.col(id_col),
-        F.array(*[
-            _pq_nearest_code(_pq_slice(F.col("_v"), sub, subdim),
-                             codebooks, sub).cast("int")
-            for sub in range(m)
-        ]).alias("codes"),
-    )
+    return _pq_codes_arrow(q, codebooks, m, subdim, id_col)
 
 
 def _pq_geometry(codebooks: list) -> tuple:

@@ -460,3 +460,34 @@ def test_release_cache_on_gc_refcounts_shared_plans(spark):
         isinstance(k, str) and k.startswith(app + "\n")
         for k in _CACHE_PIN_COUNTS
     ), "pin counters leaked"
+
+
+def test_release_cache_on_gc_distinct_wide_plans_both_released(spark):
+    """Two DISTINCT persisted 30-column plans that differ only after
+    field 25 must keep separate pin counters: the plan string truncates
+    at spark.sql.debug.maxToStringFields (default 25), and a shared
+    counter left one of the two caches pinned after both results died."""
+    import gc
+
+    from pyspark.sql import functions as F
+
+    from dataproc_spark.core import release_cache_on_gc
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def wide(bump):
+        cached = spark.range(3).select(*[
+            (F.col("id") + (bump if i == 28 else i)).alias(f"c{i}")
+            for i in range(30)
+        ]).persist()
+        return release_cache_on_gc(cached.select("c0", "c28"), cached), cached
+
+    r1, c1 = wide(1000)
+    r2, c2 = wide(2000)
+    assert r1.collect() != r2.collect()
+    for c in (c1, c2):
+        assert not cm.lookupCachedData(c._jdf).isEmpty()
+    del r1, r2
+    gc.collect()
+    for c in (c1, c2):
+        assert cm.lookupCachedData(c._jdf).isEmpty(), "a wide plan's cache leaked"

@@ -718,12 +718,69 @@ def test_embed_kmeans_drops_empty_clusters(spark):
     assert len(out) == 4
 
 
+def _pq_quantize(x):
+    """``simsearch.quantize`` on one float32 element: HALF_UP rounding of
+    the float32's double value × 1000."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    return int(Decimal(float(np.float32(x)) * 1000).quantize(
+        Decimal(1), rounding=ROUND_HALF_UP))
+
+
+def _pq_nearest(xs, book):
+    """Argmin squared L2 over a {code: centroid} book, ties → smallest
+    code."""
+    return min(
+        (sum((a - b) ** 2 for a, b in zip(xs, cv)), code)
+        for code, cv in book.items()
+    )[1]
+
+
+def _pq_model(rows, m, codes, iters):
+    """Independent per-subspace integer Lloyd model of ``pq_train`` +
+    ``pq_encode``: seeds are the ``codes`` smallest ids' quantized
+    subvectors (code = rank in id order), assignment is argmin squared
+    L2 with ties to the smallest code, updates are the element-wise
+    mean truncated toward zero, and codes that capture nothing drop.
+    Returns (sorted codebook list, {id: codes})."""
+    qv = {i: [_pq_quantize(x) for x in v] for i, v in rows}
+    sd = len(next(iter(qv.values()))) // m
+    sub_of = {i: [v[s * sd:(s + 1) * sd] for s in range(m)]
+              for i, v in qv.items()}
+    books = [
+        {c: sub_of[i][s] for c, i in enumerate(sorted(qv)[:codes])}
+        for s in range(m)
+    ]
+    for _ in range(iters):
+        nxt = []
+        for s, book in enumerate(books):
+            members = {}
+            for i in qv:
+                members.setdefault(
+                    _pq_nearest(sub_of[i][s], book), []
+                ).append(sub_of[i][s])
+            nxt.append({
+                c: [
+                    (abs(t) // len(vs)) * (1 if t >= 0 else -1)
+                    for t in (sum(col) for col in zip(*vs))
+                ]
+                for c, vs in members.items()
+            })
+        books = nxt
+    cb = sorted((s, c, v) for s, book in enumerate(books)
+                for c, v in book.items())
+    enc = {i: [_pq_nearest(sub_of[i][s], books[s]) for s in range(m)]
+           for i in qv}
+    return cb, enc
+
+
 def test_pq_train_encode_known_geometry(spark):
     """r15 PQ: on two dims split into m=2 subspaces with well-separated
     values per subspace, the trained codebook converges to the exact
-    integer means and every vector encodes to its subspace blob; the
-    arrow and expr paths agree bit-for-bit (the parity pin for the
-    production matmul kernel)."""
+    integer means and every vector encodes to its subspace blob — both
+    equal to the independent integer Lloyd model (``_pq_model``)."""
     import pytest as _pytest
 
     from dataproc_spark.extensions import simsearch
@@ -734,8 +791,8 @@ def test_pq_train_encode_known_geometry(spark):
                  float(6 if i % 2 else 0)]) for i in range(6)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cb_a = simsearch.pq_train(df, m=2, codes=2, iters=2)
-    cb_e = simsearch.pq_train(df, m=2, codes=2, iters=2, impl="expr")
-    assert cb_a == cb_e
+    want_cb, want_codes = _pq_model(rows, m=2, codes=2, iters=2)
+    assert [(s, c, [int(x) for x in v]) for s, c, v in cb_a] == want_cb
     # sub 0: codes from seeds (ids 0, 1) — both near 0, so one empties
     # unless the far blob recaptures; sub 1: seeds 0 (even, 0) and
     # 1 (odd, 6000) — exact integer means
@@ -745,15 +802,11 @@ def test_pq_train_encode_known_geometry(spark):
     assert by_sub[1][0] == [0] and by_sub[1][1] == [6000]
     codes_a = {r.vec_id: list(r.codes)
                for r in simsearch.pq_encode(df, cb_a).collect()}
-    codes_e = {r.vec_id: list(r.codes)
-               for r in simsearch.pq_encode(df, cb_a, impl="expr").collect()}
-    assert codes_a == codes_e
+    assert codes_a == want_codes
     assert all(codes_a[i][1] == (1 if i % 2 else 0) for i in range(6))
     # geometry violations raise, never mis-slice
     with _pytest.raises(ValueError, match="multiple"):
         simsearch.pq_train(df, m=3, codes=2)
-    with _pytest.raises(ValueError, match="impl"):
-        simsearch.pq_train(df, m=2, codes=2, impl="sneaky")
     bad = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, [1.0])], "vec_id long, embedding array<float>")
     with _pytest.raises(Exception, match="pq_encode: expected 2-dim"):
@@ -1529,17 +1582,16 @@ def test_rp_lsh_parameter_guards(spark):
 def test_rp_lsh_rejects_null_vectors_and_elements(spark):
     from dataproc_spark.extensions import simsearch
 
-    # a NULL element would null the band keys (expr) or NaN-cast to
-    # garbage keys (arrow): both are silent escapes, so both paths raise
+    # a NULL element would NaN-cast to garbage band keys — a silent
+    # escape, so it raises
     df = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, [1.0, None]), (3, [2.0, 1.0])],
         "vec_id long, embedding array<float>",
     )
-    for impl in ("expr", "arrow"):
-        with pytest.raises(Exception, match="no NULL elements"):
-            simsearch.rp_lsh_near_dup(
-                df, 0, dim=2, n_planes=4, band_bits=2, signature_impl=impl
-            ).collect()
+    with pytest.raises(Exception, match="no NULL elements"):
+        simsearch.rp_lsh_near_dup(
+            df, 0, dim=2, n_planes=4, band_bits=2
+        ).collect()
     null_vec = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, None)], "vec_id long, embedding array<float>"
     )
@@ -1549,45 +1601,45 @@ def test_rp_lsh_rejects_null_vectors_and_elements(spark):
         ).collect()
 
 
-def test_rp_lsh_arrow_matches_expr(spark):
+def test_rp_lsh_matches_numpy_model_on_embeddings(spark):
+    """The full rp-LSH pipeline on the sf0.001 embedding fixture equals
+    an independent numpy model: md5 ±1 planes, sign bits (dot >= 0),
+    one candidate per pair sharing any band key, exact integer dot >=
+    threshold."""
+    import numpy as np
+
     from dataproc_spark.extensions import simsearch
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     kw = dict(threshold_dot_q=250_000, dim=64, n_planes=16, band_bits=4)
-    expr = sorted(
+    got = sorted(
         (r["id_a"], r["id_b"], r["dot_q"])
-        for r in simsearch.rp_lsh_near_dup(
-            emb, signature_impl="expr", **kw
-        ).collect()
+        for r in simsearch.rp_lsh_near_dup(emb, **kw).collect()
     )
-    arrow = sorted(
-        (r["id_a"], r["id_b"], r["dot_q"])
-        for r in simsearch.rp_lsh_near_dup(
-            emb, signature_impl="arrow", **kw
+
+    q = {
+        r["vec_id"]: list(r["q"])
+        for r in emb.select(
+            "vec_id", simsearch.quantize("embedding").alias("q")
         ).collect()
+    }
+    ids = np.array(sorted(q), dtype=np.int64)
+    v = np.array([q[i] for i in ids], dtype=np.int64)
+    planes = np.array(simsearch.rp_planes(16, 64), dtype=np.int64)
+    keys = ((v @ planes.T) >= 0).reshape(len(ids), 4, 4)
+    share = np.zeros((len(ids), len(ids)), dtype=bool)
+    for j in range(4):
+        share |= (keys[:, None, j, :] == keys[None, :, j, :]).all(axis=2)
+    dots = v @ v.T
+    ii, jj = np.nonzero(
+        share & (dots >= kw["threshold_dot_q"])
+        & (ids[None, :] > ids[:, None])
     )
-    assert expr == arrow
-    assert len(expr) > 0
-
-
-def test_rp_lsh_auto_picks_arrow(spark):
-    from dataproc_spark.extensions import simsearch
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    # auto always routes to the Arrow kernel (measured faster at every
-    # probed point); expr is the explicit opt-in
-    plan = simsearch.rp_lsh_near_dup(
-        emb, 250_000, dim=64, n_planes=16, band_bits=4
-    )._jdf.queryExecution().analyzed().toString()
-    assert "MapInPandas" in plan
-    expr_plan = simsearch.rp_lsh_near_dup(
-        emb, 250_000, dim=64, n_planes=16, band_bits=4, signature_impl="expr"
-    )._jdf.queryExecution().analyzed().toString()
-    assert "MapInPandas" not in expr_plan
-    with pytest.raises(ValueError, match="signature_impl"):
-        simsearch.rp_lsh_near_dup(
-            emb, 0, dim=64, signature_impl="vectorized"
-        )
+    want = sorted(
+        (int(ids[a]), int(ids[b]), int(dots[a, b])) for a, b in zip(ii, jj)
+    )
+    assert got == want
+    assert len(want) > 0
 
 
 def test_exact_dedup_null_texts_are_not_duplicates(spark):
@@ -4166,6 +4218,37 @@ def test_write_sorted_cdx(spark, tmp_path):
         k for k, *_ in rows}
 
 
+def test_write_sorted_cdx_keeps_caller_cache(spark, tmp_path):
+    """A caller-persisted index is still cached after the write (the
+    writer only releases a persist it made itself), and the written
+    files are the same as for an uncached index."""
+    import glob
+
+    import pyarrow.parquet as pq
+    from pyspark import StorageLevel
+
+    from dataproc_spark.extensions import cdx as cdxx
+
+    rows = [(f"com,h{i % 7})/p/{i}", f"202601010000{i % 60:02d}",
+             f"https://h{i % 7}.com/p/{i}", i) for i in range(200)]
+    schema = "urlkey string, ts string, url string, length long"
+
+    def files_of(out):
+        return [pq.read_table(f).to_pylist()
+                for f in sorted(glob.glob(out + "/part-*.parquet"))]
+
+    plain = str(tmp_path / "plain")
+    cdxx.write_sorted_cdx(spark.createDataFrame(rows, schema), plain,
+                          n_files=4)
+    idx = spark.createDataFrame(rows, schema).persist()
+    idx.count()
+    cached = str(tmp_path / "cached")
+    cdxx.write_sorted_cdx(idx, cached, n_files=4)
+    assert idx.storageLevel != StorageLevel.NONE, "caller cache dropped"
+    assert files_of(cached) == files_of(plain)
+    idx.unpersist()
+
+
 def test_zipnum_index_prunes_files(spark, tmp_path):
     """r14 ZipNum-style secondary index: the pruned reader plans ONLY
     the files whose key range can match a probe (fewer inputFiles),
@@ -6135,11 +6218,11 @@ def test_kmeans_assign_arrow_parity(spark, monkeypatch):
 
 
 def test_near_dup_pairs_arrow_expr_parity(spark):
-    """r15 opt: the grouped Arrow matmul path (default) emits exactly
-    the self-join expression plan's pairs — same (id_a, id_b, dot_q)
-    multiset, same schema — including buckets with 0/1 members, a
-    bucket whose every pair clears the threshold, and negative dot
-    values around it."""
+    """r15 opt: the grouped Arrow matmul kernel emits exactly the
+    brute-force model's pairs — every same-bucket (id_a < id_b) pair
+    whose exact integer dot clears the threshold — including a
+    singleton bucket, a bucket whose every pair clears the threshold,
+    and negative dot values around it."""
     from dataproc_spark.extensions import simsearch
 
     rows = [
@@ -6150,24 +6233,29 @@ def test_near_dup_pairs_arrow_expr_parity(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     )
-    expr = simsearch.near_dup_pairs(df, threshold_dot_q=-5_000_000,
-                                    impl="expr")
-    arrow = simsearch.near_dup_pairs(df, threshold_dot_q=-5_000_000)
-    assert arrow.schema == expr.schema
-    key = lambda r: (r.id_a, r.id_b, r.dot_q)  # noqa: E731
-    expr_rows = sorted(map(key, expr.collect()))
-    assert expr_rows == sorted(map(key, arrow.collect()))
-    assert expr_rows  # the fixture must actually produce pairs
-    # and a selective threshold agrees too
-    expr2 = simsearch.near_dup_pairs(df, threshold_dot_q=10_000_000,
-                                     impl="expr")
-    arrow2 = simsearch.near_dup_pairs(df, threshold_dot_q=10_000_000)
-    assert sorted(map(key, expr2.collect())) \
-        == sorted(map(key, arrow2.collect()))
-    import pytest as _pytest
+    # integer-valued floats quantize exactly (x * 1000)
+    qv = {i: [int(x) * 1000 for x in v] for i, v, _ in rows}
+    label = {i: b for i, _, b in rows}
 
-    with _pytest.raises(ValueError, match="impl"):
-        simsearch.near_dup_pairs(df, threshold_dot_q=0, impl="bogus")
+    def model(thr):
+        out = []
+        for a in qv:
+            for b in qv:
+                if a < b and label[a] == label[b]:
+                    d = sum(x * y for x, y in zip(qv[a], qv[b]))
+                    if d >= thr:
+                        out.append((a, b, d))
+        return sorted(out)
+
+    key = lambda r: (r.id_a, r.id_b, r.dot_q)  # noqa: E731
+    for thr in (-5_000_000, 10_000_000):
+        got = simsearch.near_dup_pairs(df, threshold_dot_q=thr)
+        assert got.schema.simpleString() \
+            == "struct<id_a:bigint,id_b:bigint,dot_q:bigint>"
+        want = model(thr)
+        assert sorted(map(key, got.collect())) == want
+        assert want  # the fixture must actually produce pairs
+    assert any(d < 0 for _, _, d in model(-5_000_000))
 
 
 def test_pq_index_format_guard(spark, tmp_path):
@@ -6310,10 +6398,11 @@ def test_bm25_topk_hand_computed(spark):
 def test_pq_train_fused_update_parity(spark):
     """r15 opt round 2: the fused assign+partials PQ round (one Arrow
     kernel + driver combine, no per-round aggregate plan) trains the
-    EXACT codebook of the all-JVM expression path — negative values on
-    the fixture so the toward-zero _trunc_div means are on the hash —
-    and an explicit ``seed`` (the composite-caller path) changes
-    nothing when it matches what pq_train would collect itself."""
+    EXACT codebook of the independent integer Lloyd model — negative
+    values on the fixture so the toward-zero _trunc_div means are on
+    the hash — and pq_encode assigns the model's codes; an explicit
+    ``seed`` (the composite-caller path) changes nothing when it
+    matches what pq_train would collect itself."""
     from dataproc_spark.extensions import simsearch
 
     rows = [
@@ -6322,9 +6411,10 @@ def test_pq_train_fused_update_parity(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     fused = simsearch.pq_train(df, m=2, codes=3, iters=2)
-    expr = simsearch.pq_train(df, m=2, codes=3, iters=2, impl="expr")
-    assert [(s, c, [int(x) for x in v]) for s, c, v in fused] \
-        == [(s, c, [int(x) for x in v]) for s, c, v in expr]
+    want_cb, want_codes = _pq_model(rows, m=2, codes=3, iters=2)
+    assert [(s, c, [int(x) for x in v]) for s, c, v in fused] == want_cb
+    assert {r.vec_id: list(r.codes)
+            for r in simsearch.pq_encode(df, fused).collect()} == want_codes
     # explicit seed == the 3 smallest ids' quantized vectors
     seed = [
         (i, [round(x * 1000) for x in v]) for i, v in sorted(rows)[:3]
@@ -6388,47 +6478,60 @@ def test_spread_narrow_target_bytes_sizes_by_data(spark, tmp_path):
 
 
 def test_banded_hamming_arrow_expr_parity(spark):
-    """r15 opt round 2: the grouped-kernel arm of both banded Hamming
-    cores emits exactly the relational arm's (id_a, id_b, hamming)
-    multiset — negative-signed fingerprints (arithmetic shift on the
-    hash), dense buckets, and the NULL/wrong-length/NULL-element rows
-    the expr join silently never pairs."""
+    """r15 opt round 2: both banded Hamming cores — the single-word
+    self-join and the multi-word grouped kernel — emit exactly the
+    brute-force model's (id_a, id_b, hamming) set: every pair with
+    popcount(xor) <= max_hamming (complete by the pigeonhole bound) —
+    over negative-signed fingerprints (arithmetic shift on the hash)
+    and dense buckets, where a NULL fingerprint or a NULL word never
+    pairs."""
     from dataproc_spark.extensions import dedup as dd
+
+    def pop(x):
+        return bin(x & ((1 << 64) - 1)).count("1")
+
+    def model(fps, mh):
+        ok = {i: v for i, v in fps if v is not None
+              and not (isinstance(v, list) and None in v)}
+        out = []
+        for a in ok:
+            for b in ok:
+                if a < b:
+                    va, vb = ok[a], ok[b]
+                    if not isinstance(va, list):
+                        va, vb = [va], [vb]
+                    h = sum(pop(x ^ y) for x, y in zip(va, vb))
+                    if h <= mh:
+                        out.append((a, b, h))
+        return sorted(out)
 
     rows = [(i, ((i % 7) * 0x1111111111111111 + (i // 7)) - (i % 2) * (1 << 63))
             for i in range(40)] + [(100, None)]
     df = spark.createDataFrame(rows, "doc_id long, fp long")
     key = lambda r: (r.id_a, r.id_b, r.hamming)  # noqa: E731
     for bands, mh in ((8, 7), (4, 3)):
-        expr = dd.banded_hamming_pairs(df, bands=bands, max_hamming=mh)
-        arrow = dd.banded_hamming_pairs(
-            df, bands=bands, max_hamming=mh, impl="arrow"
-        )
-        assert arrow.schema == expr.schema
-        e = sorted(map(key, expr.collect()))
-        assert e == sorted(map(key, arrow.collect()))
-        assert e  # fixture must produce pairs
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="impl"):
-        dd.banded_hamming_pairs(df, impl="bogus")
+        got = sorted(map(key, dd.banded_hamming_pairs(
+            df, bands=bands, max_hamming=mh).collect()))
+        assert got == model(rows, mh)
+        assert got  # fixture must produce pairs
 
     mrows = [
         (i, [((i % 5) * 0x123456789 + w * (i // 5)) - (w % 2) * (1 << 62)
              for w in range(4)])
         for i in range(40)
     ] + [(100, None), (102, [1, None, 3, 4])]
+    # exactly at and just past the distance bound: 15 and 16 bits
+    mrows += [(200, [0, 0, 0, 0]), (201, [0x7FFF, 0, 0, 0]),
+              (202, [0xFFFF, 0, 0, 0])]
     mdf = spark.createDataFrame(mrows, "doc_id long, fp array<long>")
-    mexpr = dd.banded_hamming_pairs_multi(mdf, impl="expr")
     marrow = dd.banded_hamming_pairs_multi(mdf)
-    assert marrow.schema == mexpr.schema
-    me = sorted(map(key, mexpr.collect()))
-    assert me == sorted(map(key, marrow.collect()))
-    assert me
+    assert marrow.schema.simpleString() \
+        == "struct<id_a:bigint,id_b:bigint,hamming:int>"
+    me = sorted(map(key, marrow.collect()))
+    assert me == model(mrows, 15)
+    assert (200, 201, 15) in me and (200, 202, 16) not in me
     assert not any(a in (100, 102) or b in (100, 102)
                    for a, b, _ in me)
-    with _pytest.raises(ValueError, match="impl"):
-        dd.banded_hamming_pairs_multi(mdf, impl="bogus")
 
 
 def test_connected_components_local_distributed_parity(spark, monkeypatch):
@@ -6502,30 +6605,26 @@ def test_banded_hamming_multi_rejects_overlength_arrays(spark):
     (which only validates minimum length) — the expr arm summed
     bit_count over exactly `words` elements while the kernel covered
     every word present (result drift), and mixed lengths crashed
-    np.array inside the kernel. Both arms must now reject over-length
-    fingerprints identically, while NULL fingerprints stay legal."""
+    np.array inside the kernel. Over-length fingerprints must now be
+    rejected, while NULL fingerprints stay legal."""
     from dataproc_spark.extensions import dedup as dedupx
 
     rows = [(1, [1, 2, 3, 4]), (2, [1, 2, 3, 5]), (3, [0, 0, 0, 0, 9])]
     df = spark.createDataFrame(rows, "doc_id long, fp array<bigint>")
-    for impl in ("expr", "arrow"):
-        with pytest.raises(Exception, match="exactly 4 words"):
-            dedupx.banded_hamming_pairs_multi(
-                df, fp_col="fp", words=4, bands=16, max_hamming=15,
-                impl=impl,
-            ).collect()
-    # NULL fingerprints remain legal (never pair) in both arms
+    with pytest.raises(Exception, match="exactly 4 words"):
+        dedupx.banded_hamming_pairs_multi(
+            df, fp_col="fp", words=4, bands=16, max_hamming=15,
+        ).collect()
+    # NULL fingerprints remain legal (never pair)
     ok = [(1, [1, 2, 3, 4]), (2, [1, 2, 3, 5]), (3, None)]
     dfo = spark.createDataFrame(ok, "doc_id long, fp array<bigint>")
-    for impl in ("expr", "arrow"):
-        got = sorted(
-            (r.id_a, r.id_b, r.hamming)
-            for r in dedupx.banded_hamming_pairs_multi(
-                dfo, fp_col="fp", words=4, bands=16, max_hamming=15,
-                impl=impl,
-            ).collect()
-        )
-        assert got == [(1, 2, 1)], (impl, got)
+    got = sorted(
+        (r.id_a, r.id_b, r.hamming)
+        for r in dedupx.banded_hamming_pairs_multi(
+            dfo, fp_col="fp", words=4, bands=16, max_hamming=15,
+        ).collect()
+    )
+    assert got == [(1, 2, 1)]
 
 
 def test_cc_local_null_endpoint_raises_clearly(spark, monkeypatch):

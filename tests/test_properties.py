@@ -1155,10 +1155,9 @@ def test_extract_text_matches_structural_model(spark, docs):
     ),
     st.sampled_from([(4, 2), (8, 2), (8, 4)]),
     st.integers(-2_000_000, 2_000_000),
-    st.sampled_from(["expr", "arrow"]),
 )
 @settings(max_examples=10, deadline=None)
-def test_rp_lsh_matches_python_model(spark, ivecs, pb, threshold, impl):
+def test_rp_lsh_matches_python_model(spark, ivecs, pb, threshold):
     """Independent model of the full pipeline: md5 ±1 planes, sign bits
     (dot >= 0 -> 1), MSB-first band keys, >=1 shared band -> candidate,
     exact integer dot >= threshold -> pair. Integer-valued float inputs
@@ -1172,7 +1171,6 @@ def test_rp_lsh_matches_python_model(spark, ivecs, pb, threshold, impl):
         (r["id_a"], r["id_b"], r["dot_q"])
         for r in rp_lsh_near_dup(
             df, threshold, dim=4, n_planes=n_planes, band_bits=band_bits,
-            signature_impl=impl,
         ).collect()
     )
 

@@ -184,12 +184,13 @@ def test_minhash_families_are_independent(spark):
 
 
 def test_minhash_sig_arrow_expr_parity(spark):
-    """The Arrow signature kernel (r16 opt: one JVM xxhash64 per
-    shingle + numpy hashInt per family) must reproduce the expression
-    arm BIT-FOR-BIT — same ids, same shingles, same signature longs —
-    across unicode text, single-shingle docs, repeated shingles, and
-    string ids. A family drift would silently change LSH candidates
-    (and so every minhash gate's row count)."""
+    """The xxhash64 signature is pinned BIT-FOR-BIT to its definition:
+    family ``i`` of a document is ``min_s xxhash64(lit(s), lit(i))``
+    over its distinct shingles, each hash evaluated per shingle and
+    reduced in Python — across unicode text, single-shingle docs,
+    repeated shingles, and string ids. A family collapse (the
+    binary-arity lambda bug) or drift would silently change LSH
+    candidates (and so every minhash gate's row count)."""
     rows = [
         ("a", "héllo wörld ünïcode héllo wörld"),
         ("b", "x y"),
@@ -200,15 +201,33 @@ def test_minhash_sig_arrow_expr_parity(spark):
     ]
     df = spark.createDataFrame(rows, schema="doc_id string, text string")
     for nh, ss in ((8, 2), (32, 3), (3, 1)):
-        a = dedup.minhash_frame(
-            df, num_hashes=nh, shingle_size=ss, impl="arrow"
-        ).collect()
-        e = dedup.minhash_frame(
-            df, num_hashes=nh, shingle_size=ss, impl="expr"
-        ).collect()
-        ka = {r["doc_id"]: (list(r["_shingles"]), list(r["_sig"])) for r in a}
-        ke = {r["doc_id"]: (list(r["_shingles"]), list(r["_sig"])) for r in e}
-        assert ka == ke, f"arrow/expr signature drift at nh={nh} ss={ss}"
+        got = {
+            r["doc_id"]: (list(r["_shingles"]), list(r["_sig"]))
+            for r in dedup.minhash_frame(
+                df, num_hashes=nh, shingle_size=ss
+            ).collect()
+        }
+        want_sh = {}
+        for doc_id, text in rows:
+            toks = (text or "").split()
+            if len(toks) < ss:
+                continue
+            grams = [" ".join(toks[j:j + ss])
+                     for j in range(len(toks) - ss + 1)]
+            want_sh[doc_id] = list(dict.fromkeys(grams))
+        cells = sorted({g for sh in want_sh.values() for g in sh})
+        h = spark.range(1).select(*[
+            F.xxhash64(F.lit(g), F.lit(i)).alias(f"h{k}_{i}")
+            for k, g in enumerate(cells) for i in range(nh)
+        ]).first()
+        hv = {(g, i): h[f"h{k}_{i}"]
+              for k, g in enumerate(cells) for i in range(nh)}
+        want = {
+            d: (sh, [min(hv[(g, i)] for g in sh) for i in range(nh)])
+            for d, sh in want_sh.items()
+        }
+        assert got == want, f"signature drift at nh={nh} ss={ss}"
+        assert any(len(set(sig)) > 1 for _, sig in want.values())
 
 
 def test_portable_minhash_signature_matches_python(spark):

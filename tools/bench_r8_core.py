@@ -17,10 +17,9 @@ Usage: python tools/bench_r8_core.py EXPERIMENT [SRC]
     html_extract     — map-only WET extraction regex chain
     audio_decode     — WAV synthesize + chunk-walk decode (two Arrow stages)
     unicode_normalize — NFC canonicalization (Arrow pandas-UDF kernel)
-    embed_lsh:P:B:IMPL — rp_lsh_near_dup with P planes, B band bits, and
-                       IMPL signature path (expr|arrow), e.g.
-                       embed_lsh:16:4:expr (gate params) or
-                       embed_lsh:128:16:arrow (production banding)
+    embed_lsh:P:B    — rp_lsh_near_dup with P planes and B band bits, e.g.
+                       embed_lsh:16:4 (gate params) or
+                       embed_lsh:128:16 (production banding)
     url_dedup        — canonicalize + keep-one-per-URL window (r9 probe)
     domain_mixture   — per-domain aggregate + broadcast denominator (r9)
     registered_domain_psl — PSL broadcast-join rollup, map-only (r9)
@@ -139,7 +138,7 @@ def run(experiment: str, src: str | None) -> None:
     elif experiment.startswith("embed_lsh:"):
         from dataproc_spark.extensions import simsearch
 
-        _, p, b, impl = experiment.split(":")
+        _, p, b = experiment.split(":")
 
         def job():
             emb = spark.read.parquet(f"{src}/embeddings.parquet")
@@ -149,7 +148,6 @@ def run(experiment: str, src: str | None) -> None:
                 dim=64,
                 n_planes=int(p),
                 band_bits=int(b),
-                signature_impl=impl,
             )
             row = out.agg(
                 F.count(F.lit(1)).alias("n"),
