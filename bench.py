@@ -202,6 +202,40 @@ def _median(values: list[float]) -> float:
     return s[mid] if n % 2 else (s[mid - 1] + s[mid]) / 2.0
 
 
+def warmup(spark, sf_dir: str) -> None:
+    """Warm the session before timing, so the first measured query does
+    not absorb one-time costs unrelated to its plan.
+
+    Trivial jobs load the JVM/codegen paths, the Hadoop FS/parquet
+    reader classes (region is 5 rows) and the broadcast-join and window
+    exec classes: the first selective query otherwise paid ~3 s of class
+    loading. One 64-partition Arrow stage spawns the Python worker pool
+    and imports pandas/pyarrow in it (r15), which the first Arrow-path
+    query (resolve_buckets) otherwise absorbed, ~2-3 s; the method change
+    is recorded in OPTIMIZATION_r15.md with totals under both warmups.
+    A failed warmup is reported and the queries run cold.
+    """
+    from pyspark.sql import functions as F
+
+    try:
+        spark.range(1_000_000).selectExpr("sum(id)").collect()
+        spark.read.parquet(f"{sf_dir}/region.parquet").count()
+        warm = spark.range(1000).withColumnRenamed("id", "k")
+        warm.join(F.broadcast(spark.range(10).withColumnRenamed("id", "k")), "k").count()
+        warm.selectExpr(
+            "k", "row_number() over (partition by k % 7 order by k) as rn"
+        ).where("rn <= 2").count()
+        import pandas as _pd  # noqa: F401 — driver-side import parity
+
+        spark.range(0, 64, 1, 64).mapInPandas(
+            lambda it: it, "id long"
+        ).count()
+    except Exception as exc:  # noqa: BLE001 — a failed warmup must not
+        # abort the harness before any query runs (the same isolation
+        # contract as the per-query loops)
+        print(f"# warmup failed, continuing cold: {exc}", file=sys.stderr)
+
+
 def run_repeats(n_runs: int) -> None:
     """Parent mode of the repeat protocol: run the single-run harness
     ``n_runs`` times as SUBPROCESSES (each a fresh JVM + session — the
@@ -274,40 +308,7 @@ def main() -> None:
     spark = get_spark("dataproc_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm the JVM/codegen paths and the Hadoop FS/parquet reader classes
-    # with trivial jobs so the first measured query doesn't absorb session
-    # startup cost (region is 5 rows). The broadcast-join and window
-    # shapes load their exec/codegen classes here too — profiling showed
-    # the first selective query otherwise pays ~3 s of one-time class
-    # loading that has nothing to do with the measured plan.
-    from pyspark.sql import functions as _F
-
-    try:
-        spark.range(1_000_000).selectExpr("sum(id)").collect()
-        spark.read.parquet(f"{sf_dir}/region.parquet").count()
-        warm = spark.range(1000).withColumnRenamed("id", "k")
-        warm.join(_F.broadcast(spark.range(10).withColumnRenamed("id", "k")), "k").count()
-        warm.selectExpr(
-            "k", "row_number() over (partition by k % 7 order by k) as rn"
-        ).where("rn <= 2").count()
-        # r15: warm the PYTHON WORKER POOL the same way the lines above
-        # warm JVM classes — one trivial 64-partition Arrow stage spawns
-        # every worker and imports pandas/pyarrow in them ONCE, so the
-        # first measured Arrow/pandas query (resolve_buckets in the
-        # headline) doesn't absorb ~2-3 s of per-session worker spawn
-        # that has nothing to do with its plan. Methodology change is
-        # recorded in OPTIMIZATION_r15.md with A/B totals under both
-        # protocols; it shifts one-time session cost out of exactly one
-        # query's number, same rationale as the existing JVM warmup.
-        import pandas as _pd  # noqa: F401 — driver-side import parity
-
-        spark.range(0, 64, 1, 64).mapInPandas(
-            lambda it: it, "id long"
-        ).count()
-    except Exception as exc:  # noqa: BLE001 — a failed warmup must not
-        # abort the harness before any query runs (the same isolation
-        # contract as the per-query loops); queries just run cold
-        print(f"# warmup failed, continuing cold: {exc}", file=sys.stderr)
+    warmup(spark, sf_dir)
 
     qs = registry.queries()
     timings: dict[str, float] = {}

@@ -296,98 +296,70 @@ def maybe_broadcast(
     return df
 
 
+def cache_store(spark: SparkSession) -> tuple:
+    """The application's cache store: ``(lock, entries)``, held on its
+    SparkContext, so a stopped application's entries die with its
+    context. ``entries`` maps a pinned plan's ``semanticHash()`` to its
+    live pin count (:func:`release_cache_on_gc`) and a memoized scan
+    plan's text to its persisted frame. The lock is re-entrant because a
+    pin's finalizer can fire on the thread that holds it, during GC."""
+    import threading
+
+    return vars(spark.sparkContext).setdefault(
+        "_dataproc_cache", (threading.RLock(), {})
+    )
+
+
 def release_cache_on_gc(result: DataFrame, cached: DataFrame) -> DataFrame:
-    """Tie a persisted intermediate's lifetime to the RESULT frame: the
-    cache is released when the returned DataFrame is garbage-collected.
+    """Unpersist ``cached`` once ``result``, and every other live result
+    pinning the same plan, has been garbage-collected.
 
-    Operators that persist an intermediate for multiple plan branches
-    cannot unpersist before returning (the caller consumes the lazy
-    result later), and never unpersisting leaks block-manager cache for
-    the session lifetime. The finalizer holds the only extra reference,
-    so the normal collect-and-drop caller pattern frees the cache
-    promptly.
+    For operators that persist an intermediate their LAZY result reads
+    more than once: they cannot unpersist before the caller's action,
+    and never unpersisting leaks the cache for the application's life.
 
-    CONTRACT CAVEAT (r8 review): the pin lives exactly as long as the
-    RETURNED handle. A caller that immediately derives and drops it —
-    ``load_shard_selection(...).where(...)`` — releases the cache before
-    any action runs; the derived frame still computes correctly (the
-    lineage recomputes), it just pays the double source read the persist
-    avoids. Hold the returned frame in a variable while deriving from it
-    to keep the pin. This is correctness-neutral by construction:
-    unpersist never invalidates a plan, only a speedup.
+    The pin lives exactly as long as the returned handle. A caller that
+    derives a frame and drops the handle releases the cache before its
+    action runs; the derived frame still computes correctly, it only
+    recomputes the cached subtree (:func:`pin_lineage` keeps it).
 
-    r16 opt: the pins are REFERENCE-COUNTED per canonicalized plan.
-    ``unpersist()`` drops the CacheManager entry by plan EQUALITY, so a
-    dying first result used to evict the cache of a LIVE second call of
-    the same operator (Spark canonicalizes expression ids — two
-    separate constructions share one cache entry, and the second
-    ``persist()`` is a no-op on it). Profiled: every repeated in-session
-    call (minhash signatures, bm25 tf, multimodal pairs) recomputed its
-    "persisted" subtree once per downstream branch. The finalizer now
-    unpersists only when the LAST result pinning that canonical plan
-    dies. The counter key is the plan's ``semanticHash()``, not its
-    canonical string: plan strings truncate at
-    ``spark.sql.debug.maxToStringFields``, so two distinct wide plans
-    shared one counter and one of their caches leaked.
+    Pins are counted per ``semanticHash()`` in :func:`cache_store`:
+    ``unpersist()`` drops the cache entry by plan equality, and two
+    constructions of one plan share that entry, so only the last dying
+    pin may release it.
     """
     import weakref
 
-    key = None
-    try:
-        app = result.sparkSession.sparkContext.applicationId
-        key = f"{app}\n{cached.semanticHash()}"
-    except Exception:
-        pass  # fall back to an unshared pin (today's behavior)
-    if key is None:
-        key = object()  # unique — never shared
+    lock, entries = cache_store(result.sparkSession)
+    key = cached.semanticHash()
+    with lock:
+        entries[key] = entries.get(key, 0) + 1
 
-    # evict pin counters from stopped sessions (the _SHARD_RESULTS_CACHE
-    # hygiene rule): a long-lived process creating many sessions must
-    # not accumulate counters forever
-    if isinstance(key, str):
-        app_prefix = key.split("\n", 1)[0] + "\n"
-        for stale in [
-            k for k in _CACHE_PIN_COUNTS
-            if isinstance(k, str) and not k.startswith(app_prefix)
-        ]:
-            del _CACHE_PIN_COUNTS[stale]
-    _CACHE_PIN_COUNTS[key] = _CACHE_PIN_COUNTS.get(key, 0) + 1
-
-    def _release(c=cached, k=key):
+    def _release():
+        with lock:
+            n = entries.get(key, 0) - 1
+            if n > 0:
+                entries[key] = n
+                return
+            entries.pop(key, None)
+        # outside the lock: a JVM round trip other pins must not wait on
         try:
-            n = _CACHE_PIN_COUNTS.get(k, 1) - 1
-            if n <= 0:
-                _CACHE_PIN_COUNTS.pop(k, None)
-                c.unpersist()
-            else:
-                _CACHE_PIN_COUNTS[k] = n
+            cached.unpersist()
         except Exception:
-            pass  # session already stopped
+            pass  # application already stopped
 
     weakref.finalize(result, _release)
     return result
 
 
-#: live release_cache_on_gc pins per (application, canonical plan) —
-#: see release_cache_on_gc
-_CACHE_PIN_COUNTS: dict = {}
-
-
 def pin_lineage(child: DataFrame, *parents: DataFrame) -> DataFrame:
-    """Keep ``parents`` alive for the life of ``child`` — the antidote
-    to :func:`release_cache_on_gc`'s derive-and-drop caveat.
+    """Keep ``parents`` alive for the life of ``child``.
 
-    An operator result that carries a cache-release finalizer dies the
-    moment a caller derives from it and drops the handle
-    (``op(...).select(...)``): the operator's persisted subtree is
-    unpersisted BEFORE the derived frame ever executes, so the action
-    silently recomputes it once per plan branch (r16 opt — a registry
-    audit found 14 gates doing exactly this; the bm25 gate's executed
-    plan showed six parquet scans and zero InMemoryTableScans while
-    its tf frame was 'persisted'). Attaching the parent handles to the
-    child makes the pins live exactly as long as the frame that needs
-    them. Correctness-neutral either way — only the recompute is at
-    stake."""
+    For a gate that derives ``child`` from an operator result carrying a
+    :func:`release_cache_on_gc` pin and returns only ``child``: the pin
+    would otherwise die with the dropped handle, before the caller's
+    action, and the action would recompute the cached subtree once per
+    plan branch. Correctness-neutral either way."""
     existing = getattr(child, "_dataproc_pins", ())
     child._dataproc_pins = tuple(existing) + tuple(parents)
     return child

@@ -740,11 +740,9 @@ def rp_lsh_near_dup(
         )
         .alias("_v"),
     )
-    # three plan branches read e (signature pass + both verify sides) —
-    # persist so the scan+quantize+validate runs once, released when the
-    # result frame is garbage-collected (same lifetime contract as the
-    # minhash signature table)
-    e = e.persist()
+    # three plan branches read e, but persisting it measured neutral
+    # (embed_lsh_near_dup on/off, sf0.1 6.3/6.0 s count, 6.4/5.8 s
+    # consume; 10x 195.9/195.5 s count), so e is recomputed per branch
 
     banded = _rp_banded_arrow(e, planes, band_bits, id_col)
     left = banded.alias("l")
@@ -771,9 +769,7 @@ def rp_lsh_near_dup(
         .select("id_a", "id_b", dot_q(F.col("_va"), F.col("_vb")).alias("dot_q"))
         .where(F.col("dot_q") >= threshold_dot_q)
     )
-    from dataproc_spark.core import release_cache_on_gc
-
-    return release_cache_on_gc(out, e)
+    return out
 
 
 #: centroid-table size (k × dim literal terms) above which
@@ -1130,6 +1126,9 @@ def embed_kmeans(
     out, q, _, _, _ = _embed_kmeans_impl(
         embeddings, k, iters, id_col, vec_col, scale
     )
+    # pin A/B (q, shared with semantic_dedup and ivfpq_topk), sf0.1
+    # on/off: embed_kmeans 1.12/1.21 s, semantic_dedup 1.56/1.73 s,
+    # ann_ivfpq 3.23/3.51 s (count; consume within noise)
     return release_cache_on_gc(out.select(id_col, "cluster"), q)
 
 
@@ -1452,6 +1451,7 @@ def semantic_dedup(
     if with_cluster:
         kept = kept.join(assigned.select(id_col, "cluster"), id_col)
     kept = release_cache_on_gc(kept, kq)
+    # pin A/B, semantic_dedup sf0.1 on/off: 1.8/2.5 s count, 1.7/2.0 s consume
     return release_cache_on_gc(kept, assigned)
 
 
@@ -2037,9 +2037,9 @@ def ivfpq_topk(
     resid = q.mapInPandas(
         _resid_kernel,
         schema=f"{id_col} {idt}, cluster int, _r array<long>",
-    ).persist()  # consumed by BOTH pq_train and pq_encode — an opaque
-    # kernel recomputes fully per consumer otherwise (pruning cannot
-    # reach inside mapInPandas)
+    )  # not persisted: pq_train and pq_encode each re-run the kernel,
+    # measured neutral (ann_ivfpq on/off, sf0.1 2.7/2.6 s count,
+    # 10x 5.9/5.7 s count, 5.9/5.9 s consume)
     # PQ on residuals: train + encode via the existing machinery over a
     # synthetic "embedding" float view is wrong (residuals are already
     # quantized longs) — train directly on the long vectors with
@@ -2183,8 +2183,7 @@ def ivfpq_topk(
         .where(F.col("rank") <= k)
         .select("qid", "id", "d_adc", F.col("rank").cast("int").alias("rank"))
     )
-    # three pins: the assignment cache (q), the kmeans impl's quantized
-    # projection (kq), and the residual cache all back lazy subtrees
+    # pin A/B for q, ann_ivfpq on/off: 10x 6.5/7.2 s consume (4 pairs),
+    # 6.6/6.6 s count; kq's is at embed_kmeans
     out = release_cache_on_gc(out, q)
-    out = release_cache_on_gc(out, kq)
-    return release_cache_on_gc(out, resid)
+    return release_cache_on_gc(out, kq)

@@ -83,6 +83,8 @@ def _load_selection(
     # order == _idx asc; row_number over (score desc, _idx asc) is exact.
     w = Window.partitionBy("query").orderBy(F.col("shard_score").desc(), F.col(IDX).asc())
     out = df.withColumn("rank", (F.row_number().over(w) - 1).cast("int")).drop(IDX)
+    # pin A/B, perfbench ss_sweep on/off (seeds 41, 42): wall 29.0/30.4
+    # and 30.3/33.8 s, cpu 83/89 and 88/98 s
     return release_cache_on_gc(out, scores)
 
 

@@ -9,7 +9,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataproc_spark.core import pin_lineage
 from dataproc_spark.extensions import dedup
 
 # ---------------------------------------------------------------------------
@@ -171,14 +170,10 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, threshold=0.2, shingle_size=3, num_hashes=16, bands=4,
         portable=True, scale_m=1000,
     )
-    # pin_lineage: the returned plan consumes pairs' persisted
-    # signature subtree — dropping the handle at return would unpersist
-    # it before the driver's action runs (r16 opt, derive-and-drop)
-    return pin_lineage(
-        dedup.dedup_keep_representatives(docs, pairs).select(
-            "doc_id", "lang", "source"
-        ),
-        pairs,
+    # connected_components consumes pairs while the gate is built; the
+    # returned plan never reads pairs' cache again
+    return dedup.dedup_keep_representatives(docs, pairs).select(
+        "doc_id", "lang", "source"
     )
 
 
@@ -310,13 +305,8 @@ def q_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.ngram_jaccard_pairs(
         docs, n=3, min_shared=2, jaccard_threshold_m=100
     )
-    # pin_lineage: keep pairs' persisted subtree alive for the driver's
-    # action (r16 opt, derive-and-drop)
-    return pin_lineage(
-        dedup.dedup_keep_representatives(docs, pairs).select(
-            "doc_id", "lang", "source"
-        ),
-        pairs,
+    return dedup.dedup_keep_representatives(docs, pairs).select(
+        "doc_id", "lang", "source"
     )
 
 
@@ -375,12 +365,11 @@ def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, n=3, min_shared=2, jaccard_threshold_m=100
     )
     comps = dedup.connected_components(pairs, id_a="id_a", id_b="id_b")
-    return pin_lineage(
+    return (
         comps.groupBy("component")
         .agg(F.count(F.lit(1)).cast("long").alias("cluster_size"))
         .groupBy("cluster_size")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_clusters")),
-        pairs,
+        .agg(F.count(F.lit(1)).cast("long").alias("n_clusters"))
     )
 
 
@@ -1114,6 +1103,7 @@ def q_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min_by("caption", "doc_id").alias("caption"),
         F.count(F.lit(1)).cast("long").alias("n_copies"),
     ).select("doc_id", "img_url", "caption", "n_copies")
+    # pin A/B, sf0.1 on/off: 2.6/3.1 s count, 2.3/3.1 s consume
     return release_cache_on_gc(out, pairs)
 
 

@@ -32,8 +32,9 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.ngram_jaccard_pairs(
         docs, n=3, min_shared=2, jaccard_threshold_m=100
     )
-    # pin_lineage: the wedge joins consume pairs' persisted subtree
-    # (r16 opt, derive-and-drop)
+    # pin_lineage keeps pairs' shingle pin alive for the lazy wedge
+    # joins (A/B with the persist off: 7.5/9.6 s count, 8.2/12.6 s
+    # consume at sf0.1)
     from dataproc_spark.core import pin_lineage
 
     return pin_lineage(

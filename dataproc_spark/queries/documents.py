@@ -760,6 +760,7 @@ def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("height").alias("hdr_height"),
         "progressive",
     )
+    # pin A/B, sf0.1 on/off: 2.2/3.1 s count, 2.3/2.9 s consume
     return release_cache_on_gc(stats.join(meta, "media_id"), media)
 
 

@@ -320,18 +320,13 @@ def q_embed_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     label buckets as `embed_near_dup` (never all-pairs); the hit check is
     a left join of two bounded pair sets."""
     emb = _t(spark, sf_dir, "embeddings")
-    truth_res = simsearch.near_dup_pairs(emb, threshold_dot_q=300_000)
-    truth = truth_res.select("id_a", "id_b")
-    found_res = simsearch.rp_lsh_near_dup(
-        emb, threshold_dot_q=300_000, dim=64, n_planes=16, band_bits=4
+    truth = simsearch.near_dup_pairs(emb, threshold_dot_q=300_000).select(
+        "id_a", "id_b"
     )
-    found = found_res.select("id_a", "id_b", F.lit(1).alias("_hit"))
-    # pin_lineage: both operands carry persisted subtrees whose pins
-    # would otherwise die before the driver's action runs (r16 opt,
-    # the derive-and-drop caveat)
-    from dataproc_spark.core import pin_lineage
-
-    return pin_lineage(
+    found = simsearch.rp_lsh_near_dup(
+        emb, threshold_dot_q=300_000, dim=64, n_planes=16, band_bits=4
+    ).select("id_a", "id_b", F.lit(1).alias("_hit"))
+    return (
         truth.join(found, ["id_a", "id_b"], "left")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_truth"),
@@ -347,9 +342,7 @@ def q_embed_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             # domain_mixture zero-total convention (r8 ADVICE)
             "CAST(CASE WHEN n_truth > 0 THEN n_found * 1000 div n_truth "
             "ELSE 0 END AS BIGINT) AS recall_m",
-        ),
-        truth_res,
-        found_res,
+        )
     )
 
 
@@ -752,9 +745,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "embeddings"), threshold_dot_q=300_000,
         k=8, iters=2, with_cluster=True,
     )
-    # pin_lineage: the select would drop kept's cache pins (the cached
-    # kmeans assignment the pair stage consumes) before the driver's
-    # action runs (r16 opt, derive-and-drop)
+    # pin_lineage keeps kept's pins (their A/B: simsearch.semantic_dedup)
+    # alive past the select, for the driver's action
     from dataproc_spark.core import pin_lineage
 
     return pin_lineage(
@@ -1033,9 +1025,8 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5, cells=8, cell_iters=2, n_probe=2, m=8, codes=16,
         pq_iters=2,
     )
-    # pin_lineage: the select would drop ivfpq_topk's cache pins (the
-    # cached assignment/codes the candidate join consumes) before the
-    # driver's action runs (r16 opt, derive-and-drop)
+    # pin_lineage keeps ranked's pins (their A/B: simsearch.ivfpq_topk)
+    # alive past the select, for the driver's action
     from dataproc_spark.core import pin_lineage
 
     return pin_lineage(

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from dataproc_spark.core import cartesian
+from dataproc_spark.core import cache_store, cartesian
 from dataproc_spark.io import trec_frame
 from dataproc_spark.measures import num_retrieved, precision_at
 from dataproc_spark.selective import (
@@ -40,48 +40,29 @@ def _shard_results(li: DataFrame) -> DataFrame:
     )
 
 
-#: session-scoped memo for the persisted shard-results frame, keyed by the
-#: lineitem scan's plan text — without it, every selective query in a
-#: registry sweep would persist a FRESH copy of the identical frame and
-#: nothing would ever unpersist them, filling executor storage with
-#: duplicates for the life of the session.
-_SHARD_RESULTS_CACHE: dict[str, DataFrame] = {}
-
-
 def _shared_shard_results(li: DataFrame) -> DataFrame:
-    """The shard-results frame, persisted ONCE per source and reused
-    across both plan branches and registry queries.
+    """The shard-results frame, persisted once per lineitem scan and
+    application, and shared by the selective gates.
 
-    Every selective pipeline derives BOTH its selection (an aggregate of
-    the results) and its probe side from the same frame; without the
-    persist each branch re-scans lineitem — at 100 TB that is a full extra
-    pass over the corpus. The memo makes the persist session-scoped: six
-    selective gate queries share one cache entry instead of leaking six.
-    (On a real cluster this is where you would checkpoint the results
-    table instead.)
+    Every selective pipeline derives both its selection (an aggregate of
+    the results) and its probe side from this frame, so without the
+    persist each branch re-scans lineitem. The memo, keyed by the scan
+    plan in the application's :func:`~dataproc_spark.core.cache_store`,
+    lets a registry sweep's selective gates share one cache entry
+    instead of persisting a copy each.
     """
-    app = li.sparkSession.sparkContext.applicationId
-    # evict entries from other (stopped) sessions: a long-lived process
-    # creating several sessions (pytest, repeated bench harnesses) would
-    # otherwise accumulate one dead py4j-bound DataFrame handle per
-    # (application, plan) forever (r7 review finding)
-    for stale in [k for k in _SHARD_RESULTS_CACHE if not k.startswith(app + "\n")]:
-        del _SHARD_RESULTS_CACHE[stale]
-    key = app + "\n" + li._jdf.queryExecution().logical().toString()
-    cached = _SHARD_RESULTS_CACHE.get(key)
-    if cached is None:
-        # note: spreading the scan across cores before the persist
-        # (spread_narrow) was measured at sf0.1 and REJECTED — the
-        # added 600 k-row shuffle costs more than the parallel cache
-        # materialization saves (bench select_top_t 3.7 s → 4.1 s).
-        # r16 re-measured the BYTE-SIZED variant (1 MB/task ≈ 11-16
-        # partitions, with and without an eager count()): also a LOSS
-        # (fresh-session A/B 3.1-3.7 s → 4.3-4.6 s) — the spread
-        # exchange writes the full 600 k-row projection (~16 MB) from
-        # the same 3 scan tasks, which costs as much as the 3-task
-        # columnar cache write it parallelizes. The 3-split scan is the
-        # floor here; do not retry spread shapes on this cache.
-        cached = _SHARD_RESULTS_CACHE[key] = _shard_results(li).persist()
+    lock, entries = cache_store(li.sparkSession)
+    key = li._jdf.queryExecution().logical().toString()
+    with lock:
+        cached = entries.get(key)
+        if cached is None:
+            # spreading the scan across cores before the persist was
+            # measured a loss at sf0.1, plain and byte-sized (bench
+            # select_top_t 3.7 s -> 4.1 s; 3.1-3.7 s -> 4.3-4.6 s): the
+            # spread exchange writes the whole projection from the same
+            # 3 scan tasks, costing as much as the cache write it
+            # parallelizes
+            cached = entries[key] = _shard_results(li).persist()
     return cached
 
 

@@ -868,12 +868,10 @@ def q_nb_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = scores.join(pred, "doc_id").select(
         "doc_id", "label", "n_feats", "score", "pred_label"
     )
-    # pin_lineage: scores carries score_documents' internal cache pin —
-    # deriving `out` and dropping the handle would release it before
-    # the driver's action runs (r16 opt, derive-and-drop)
-    from dataproc_spark.core import pin_lineage
-
-    return release_cache_on_gc(pin_lineage(out, scores), feats)
+    # pin A/B on/off: feats sf0.1 3.5/4.2 s count, 3.8/3.9 s consume;
+    # scores 10x 7.6/8.8 s consume (count, which skips the pred branch,
+    # is faster off: 8.2/6.5 s)
+    return release_cache_on_gc(release_cache_on_gc(out, scores), feats)
 
 
 def _sql_q(c: str, scale: int = 4096) -> str:
@@ -1115,10 +1113,8 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, _BM25_QUERIES, "qid long, terms array<string>"
     )
     ranked = textstats.bm25_topk(docs, queries, k=10)
-    # pin_lineage: the select would drop bm25's tf-cache pin before the
-    # driver's action runs — the executed plan then re-tokenized the
-    # corpus once per branch (measured: six parquet scans, zero
-    # InMemoryTableScans; r16 opt, derive-and-drop)
+    # pin_lineage keeps bm25's tf pin (its A/B: textstats.bm25_topk)
+    # alive past the select, for the driver's action
     from dataproc_spark.core import pin_lineage
 
     return pin_lineage(

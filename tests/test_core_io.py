@@ -436,7 +436,7 @@ def test_release_cache_on_gc_refcounts_shared_plans(spark):
     recompute its 'persisted' subtree once per downstream branch)."""
     import gc
 
-    from dataproc_spark.core import _CACHE_PIN_COUNTS, release_cache_on_gc
+    from dataproc_spark.core import cache_store, release_cache_on_gc
 
     base = spark.range(100).selectExpr("id", "id * 2 as v")
 
@@ -455,11 +455,54 @@ def test_release_cache_on_gc_refcounts_shared_plans(spark):
     del r2
     gc.collect()
     assert not c2.storageLevel.useMemory, "last pin failed to unpersist"
-    app = spark.sparkContext.applicationId
+    _, entries = cache_store(spark)
     assert not any(
-        isinstance(k, str) and k.startswith(app + "\n")
-        for k in _CACHE_PIN_COUNTS
+        isinstance(v, int) for v in entries.values()
     ), "pin counters leaked"
+
+
+def test_release_cache_on_gc_concurrent_pins_of_one_plan(spark):
+    """Threads registering and dropping pinned results of ONE plan at
+    the same time must leave no pin count and no cache entry behind:
+    the count is updated under the store's lock, and only the release
+    that takes it to zero unpersists."""
+    import gc
+    import threading
+
+    from dataproc_spark.core import cache_store, release_cache_on_gc
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    base = spark.range(50).selectExpr("id % 5 as k")
+
+    def plan():
+        return base.groupBy("k").count()
+
+    key = plan().semanticHash()
+    start = threading.Barrier(6)
+    errors = []
+
+    def worker():
+        try:
+            start.wait()
+            held = []
+            for i in range(12):
+                cached = plan().persist()
+                held.append(release_cache_on_gc(cached.select("k"), cached))
+                if i % 3 == 2:
+                    held.clear()  # drop while other threads register
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker) for _ in range(6)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    gc.collect()
+    assert not errors, errors
+    _, entries = cache_store(spark)
+    assert entries.get(key, 0) == 0, "pin count leaked"
+    assert cm.lookupCachedData(plan()._jdf).isEmpty(), "cache entry leaked"
 
 
 def test_release_cache_on_gc_distinct_wide_plans_both_released(spark):

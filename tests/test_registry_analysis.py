@@ -127,6 +127,14 @@ _NESTED_LOOP_OK = {
 }
 
 
+def _registered_pins(before: dict, entries: dict) -> set:
+    """Store keys added since ``before``, or whose pin count grew."""
+    return {
+        k for k, v in entries.items()
+        if k not in before or (isinstance(v, int) and v > before[k])
+    }
+
+
 @pytest.mark.skipif(
     not os.path.isdir(_SF_DIR), reason="driver testdata not present"
 )
@@ -134,8 +142,29 @@ _NESTED_LOOP_OK = {
     "name", [n for n in REGISTRY if n not in _STREAMING]
 )
 def test_registry_plan_has_no_unexpected_nested_loop(spark, name):
+    """Also the plan-shape guard on cache pins: every pin the build
+    leaves registered in the application's cache store must survive
+    gc.collect() while the result lives, and must be read by the
+    executed plan (a "persisted" subtree with no InMemoryTableScan is a
+    pin that only holds memory)."""
+    import gc
+
+    from dataproc_spark.core import cache_store
+
     fn, _sql = REGISTRY[name]
-    plan = fn(spark, _SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    _, entries = cache_store(spark)
+    before = dict(entries)
+    df = fn(spark, _SF_DIR)
+    registered = _registered_pins(before, entries)
+    gc.collect()
+    assert _registered_pins(before, entries) == registered, (
+        f"{name}: a pin registered by the build died with the result live"
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if registered:
+        assert "InMemoryTableScan" in plan, (
+            f"{name}: pinned a cache its executed plan never reads"
+        )
     if name in _NESTED_LOOP_OK:
         return
     assert "BroadcastNestedLoopJoin" not in plan, name

@@ -1698,3 +1698,31 @@ def test_nb_model_persistence(spark, tmp_path):
         .write.parquet(bad + "/meta")
     with _pytest.raises(ValueError, match="format"):
         cls.read_nb_model(spark, bad)
+
+
+@pytest.mark.parametrize("name", ["dedup_cc", "dedup_cluster_sizes"])
+def test_dedup_cc_local_arm_keeps_no_pairs_cache(spark, name):
+    """At sf0.001 connected_components takes the driver union-find arm,
+    which consumes the pair graph while the gate is built; the returned
+    plan never reads the pairs again, so once the gate is built no pin
+    and no cache entry for the pairs may stay live."""
+    import gc
+    import os
+
+    from dataproc_spark.core import cache_store
+    from dataproc_spark.queries import REGISTRY
+
+    sf_dir = "/root/testdata/sf0.001"
+    if not os.path.isdir(sf_dir):
+        pytest.skip("driver testdata not present")
+    _, entries = cache_store(spark)
+    gc.collect()
+    pins = {k: v for k, v in entries.items() if isinstance(v, int)}
+    cached_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
+    out = REGISTRY[name][0](spark, sf_dir)
+    gc.collect()
+    assert {k: v for k, v in entries.items() if isinstance(v, int)} == pins
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= cached_rdds
+    assert "InMemoryTableScan" not in (
+        out._jdf.queryExecution().executedPlan().toString()
+    )

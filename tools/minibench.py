@@ -18,6 +18,7 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from bench import warmup
 from dataproc_spark.core import get_spark
 from dataproc_spark import queries as registry
 
@@ -27,18 +28,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("minibench")
     spark.sparkContext.setLogLevel("ERROR")
-    from pyspark.sql import functions as _F
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    warm = spark.range(1000).withColumnRenamed("id", "k")
-    warm.join(_F.broadcast(spark.range(10).withColumnRenamed("id", "k")),
-              "k").count()
-    warm.selectExpr(
-        "k", "row_number() over (partition by k % 7 order by k) as rn"
-    ).where("rn <= 2").count()
-    # r15: python-worker-pool warmup, mirroring bench.py
-    spark.range(0, 64, 1, 64).mapInPandas(lambda it: it, "id long").count()
+    warmup(spark, sf_dir)
 
     qs = registry.queries()
     total = 0.0

@@ -20,6 +20,7 @@ import urllib.request
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from bench import warmup
 from dataproc_spark.core import get_spark
 from dataproc_spark import queries as registry
 
@@ -33,16 +34,7 @@ def main() -> None:
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
 
-    # same warmup as bench.py so run 1 is comparable
-    from pyspark.sql import functions as _F
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    warm = spark.range(1000).withColumnRenamed("id", "k")
-    warm.join(_F.broadcast(spark.range(10).withColumnRenamed("id", "k")), "k").count()
-    warm.selectExpr(
-        "k", "row_number() over (partition by k % 7 order by k) as rn"
-    ).where("rn <= 2").count()
+    warmup(spark, sf_dir)  # bench.py's, so run 1 is comparable
 
     qs = registry.queries()
     for i in range(runs):
