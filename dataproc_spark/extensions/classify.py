@@ -353,7 +353,7 @@ def train_nb_weights(
         .withColumnRenamed("_bucket", "bucket")
         .groupBy("label", "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("_cnt"))
-    )
+    ).persist()
     q_alpha = F.lit(int(alpha)).cast("long")
     weights = counts.select(
         "label", "bucket",
@@ -371,6 +371,7 @@ def train_nb_weights(
                .agg(F.count(F.lit(1)).cast("long").alias("_n")).collect()
     }
     if not ndocs:  # empty training frame: empty model, no labels
+        counts.unpersist()
         return weights, {}, {}
     # zero-feature-only classes appear in ndocs but not tot
     spark = df.sparkSession
@@ -393,9 +394,13 @@ def train_nb_weights(
     intercept = {
         l: int(scalar[f"p_{i}"]) for i, l in enumerate(labels_sorted)
     }
-    # no persist of counts: measured neutral-to-faster without it
-    # (nb_train_score on/off, sf0.1 3.0/2.9 s, 10x 10.4/10.3 s count)
-    return weights, bias, intercept
+    # pin A/B, nb_model_roundtrip (no features passed: the tot collect
+    # and the model write both read counts) on/off, ± IQR of on runs:
+    # 10x 19.2/21.7 ±3.7 s count (every off run slower), 18.2/22.0 ±3.0
+    # s consume; sf0.1 6.4/5.8 ±1.1 s count. nb_train_score: no cell slower
+    from dataproc_spark.core import release_cache_on_gc
+
+    return release_cache_on_gc(weights, counts), bias, intercept
 
 
 def write_nb_model(

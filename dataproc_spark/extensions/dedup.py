@@ -1517,7 +1517,9 @@ def cross_doc_spans(
             F.col("n_tokens").cast("long").alias("n_tokens"),
         )
     )
-    # pin A/B, cross_doc_spans sf0.1 on/off: 18.5/20.2 s count, 20.7/21.0 s consume
+    # pin A/B, cross_doc_spans sf0.1 on/off (± IQR of on runs): 18.0/18.0
+    # ±1.2 s count, 18.9/20.7 ±3.8 s consume; kept for want of a 10x
+    # cell (the span self-join is quadratic on the verbatim replica)
     return _release_on_gc(out, cached)
 
 

@@ -321,8 +321,9 @@ def image_near_dup_256(
     rows; pixels never leave the Arrow hash stage."""
     from dataproc_spark.extensions.dedup import banded_hamming_pairs_multi
 
-    # no persist of fps: measured neutral without it (image_dedup_256
-    # on/off, sf0.1 6.1/5.3 s, 10x 29.1/30.1 s count, 35.2/35.8 s consume)
+    # no persist of fps: image_dedup_256 on/off (± IQR of on runs, 6
+    # pairs) sf0.1 4.9/4.7 ±1.0 s count, 4.6/4.5 ±1.1 s consume; 10x
+    # 36.7/31.9 ±11.7 s count, 38.3/38.6 ±5.5 s consume — no cell slower
     fps = (
         image_dhash256(media, id_col, payload_col)
         .where(F.col("dhash256").isNotNull())

@@ -740,9 +740,9 @@ def rp_lsh_near_dup(
         )
         .alias("_v"),
     )
-    # three plan branches read e, but persisting it measured neutral
-    # (embed_lsh_near_dup on/off, sf0.1 6.3/6.0 s count, 6.4/5.8 s
-    # consume; 10x 195.9/195.5 s count), so e is recomputed per branch
+    # three plan branches read e (signature pass + both verify sides) —
+    # persist so the scan+quantize+validate runs once
+    e = e.persist()
 
     banded = _rp_banded_arrow(e, planes, band_bits, id_col)
     left = banded.alias("l")
@@ -769,7 +769,13 @@ def rp_lsh_near_dup(
         .select("id_a", "id_b", dot_q(F.col("_va"), F.col("_vb")).alias("dot_q"))
         .where(F.col("dot_q") >= threshold_dot_q)
     )
-    return out
+    from dataproc_spark.core import release_cache_on_gc
+
+    # pin A/B, embed_lsh_near_dup on/off (± IQR of on runs): sf0.1
+    # 3.75/3.67 ±0.74 s count, 4.48/4.71 ±0.85 s consume, 10x 195.9/195.5
+    # s count; kept for want of a 10x consume cell (196 s a call), and
+    # the 100x probe that added it went 58.7 -> 33.6 s (SCALE.md rp-lsh)
+    return release_cache_on_gc(out, e)
 
 
 #: centroid-table size (k × dim literal terms) above which
@@ -1009,21 +1015,24 @@ def _embed_kmeans_impl(
     combine, then ≤ k·dim rows. Iterations are a fixed small count, the
     caller's knob, so lineage stays shallow (no checkpoint needed).
 
-    Returns ``(assigned, q, centroids, dim, seed)``: the final
-    assignment frame carrying (id, cluster, _v) over the persisted
-    validated projection ``q`` (the CALLER owns q's cache lifetime),
-    the final driver-side centroid table and vector dim — so composite
-    operators (IVFPQ) can reuse the quantized/validated/assigned rows
-    without a re-derivation join (r15 opt) — plus the collected seed
-    rows: ``seed_limit`` widens the init collect to
-    ``max(k, seed_limit)`` smallest-id rows so a composite caller
+    Returns ``(assigned, centroids, dim, seed)``: the final
+    assignment frame carrying (id, cluster, _v) over the validated
+    projection, the final driver-side centroid table and vector dim —
+    so composite operators (IVFPQ) can reuse the
+    quantized/validated/assigned rows without a re-derivation join (r15
+    opt) — plus the collected seed rows: ``seed_limit`` widens the init
+    collect to ``max(k, seed_limit)`` smallest-id rows so a composite caller
     (IVFPQ's PQ seeding) can derive its own seed from the SAME collect
     instead of paying a separate orderBy/limit job (r15 opt round 2).
     """
+    # not persisted: the seed collect and each round re-derive the
+    # projection. Pin A/B (on/off ± IQR of on runs, s), count at sf0.1:
+    # embed_kmeans 0.99/1.04 ±0.19, semantic_dedup 1.66/1.61 ±0.41,
+    # ann_ivfpq 2.49/2.47 ±0.24; at 10x: 1.31/1.25 ±0.11, 11.62/11.79
+    # ±3.29, 5.71/5.82 ±0.44 — no cell slower (SCALE.md "Cache pins")
     q = _spread_vectors(embeddings).select(
         F.col(id_col), quantize(vec_col, scale).alias("_v")
     )
-    q = q.persist()
     seed = q.orderBy(F.col(id_col).asc()).limit(max(k, seed_limit)).collect()
     centroids = []
     seed_dim = None
@@ -1049,7 +1058,6 @@ def _embed_kmeans_impl(
         # 0 silently: every distance aggregates to NULL and the
         # (dist, cid) struct min sorts the NULL first (r8 follow-up
         # review finding; the same raise policy as rp_lsh_near_dup).
-        # Applied over the persisted projection — no extra scan.
         dim = len(centroids[0][1])
         q = q.select(
             F.col(id_col),
@@ -1103,11 +1111,7 @@ def _embed_kmeans_impl(
             for r in rows
         )
     out = _kmeans_assign(q, centroids).select(id_col, "cluster", "_v")
-    # the returned frame is LAZY: unpersisting here would force the
-    # final assignment to recompute the whole spread+quantize scan (r8
-    # review finding) — the caller ties the cache to its result's
-    # lifetime (or reuses q directly)
-    return out, q, centroids, dim, seed
+    return out, centroids, dim, seed
 
 
 def embed_kmeans(
@@ -1119,17 +1123,11 @@ def embed_kmeans(
     scale: int = 1000,
 ) -> DataFrame:
     """Public (id, cluster) view of :func:`_embed_kmeans_impl` — see
-    its docstring for the algorithm/exactness contract. The cache the
-    impl leaves persisted is tied to the returned frame's lifetime."""
-    from dataproc_spark.core import release_cache_on_gc
-
-    out, q, _, _, _ = _embed_kmeans_impl(
+    its docstring for the algorithm/exactness contract."""
+    out, _, _, _ = _embed_kmeans_impl(
         embeddings, k, iters, id_col, vec_col, scale
     )
-    # pin A/B (q, shared with semantic_dedup and ivfpq_topk), sf0.1
-    # on/off: embed_kmeans 1.12/1.21 s, semantic_dedup 1.56/1.73 s,
-    # ann_ivfpq 3.23/3.51 s (count; consume within noise)
-    return release_cache_on_gc(out.select(id_col, "cluster"), q)
+    return out.select(id_col, "cluster")
 
 
 def hard_negatives(
@@ -1426,14 +1424,14 @@ def semantic_dedup(
     from dataproc_spark.core import release_cache_on_gc
     from dataproc_spark.extensions import dedup as _dedup
 
-    # r15 opt round 2: consume the kmeans impl's cached quantized
+    # r15 opt round 2: consume the kmeans impl's quantized
     # assignment (id, cluster, _v) directly — the previous shape
     # re-scanned `embeddings`, equi-joined the (id, cluster) view back
     # on, and re-quantized the vectors for the pair stage (a full extra
     # scan + join exchange + transform for rows the impl already had;
     # the ivfpq_topk lesson). scale=1 over the already-quantized longs
     # is the identity (exact: round(double(x)) == x for |x| < 2^53).
-    out, kq, _, _, _ = _embed_kmeans_impl(
+    out, _, _, _ = _embed_kmeans_impl(
         embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
         scale=scale,
     )
@@ -1450,7 +1448,6 @@ def semantic_dedup(
     )
     if with_cluster:
         kept = kept.join(assigned.select(id_col, "cluster"), id_col)
-    kept = release_cache_on_gc(kept, kq)
     # pin A/B, semantic_dedup sf0.1 on/off: 1.8/2.5 s count, 1.7/2.0 s consume
     return release_cache_on_gc(kept, assigned)
 
@@ -1986,15 +1983,15 @@ def ivfpq_topk(
     # from the kmeans impl — the old shape re-derived spread+quantize
     # from scratch and equi-joined the (id, cluster) view back on, a
     # full extra scan plus a join exchange for rows the impl already
-    # had cached as (id, _v, cluster)
-    assigned, kq, trained_cent, dim, kseed = _embed_kmeans_impl(
+    # had as (id, _v, cluster)
+    assigned, trained_cent, dim, kseed = _embed_kmeans_impl(
         embeddings, k=cells, iters=cell_iters, id_col=id_col,
         vec_col=vec_col, scale=scale, seed_limit=codes,
     )
     # persisted: `assigned` is itself an Arrow stage (the kmeans
     # assignment kernel) with THREE consumers (centroid recompute,
     # residuals, the code/cluster join) — without the pin each would
-    # re-run the kernel over the kq cache
+    # re-run the kernel and the projection under it
     q = assigned.persist()
     # centroids recomputed exactly as embed_kmeans' final update would:
     # integer mean per cluster over the final assignment — the fused
@@ -2037,9 +2034,10 @@ def ivfpq_topk(
     resid = q.mapInPandas(
         _resid_kernel,
         schema=f"{id_col} {idt}, cluster int, _r array<long>",
-    )  # not persisted: pq_train and pq_encode each re-run the kernel,
-    # measured neutral (ann_ivfpq on/off, sf0.1 2.7/2.6 s count,
-    # 10x 5.9/5.7 s count, 5.9/5.9 s consume)
+    )  # not persisted: pq_train and pq_encode each re-run the kernel;
+    # ann_ivfpq on/off (± IQR of on runs, 6 pairs) sf0.1 2.60/2.46 ±0.16
+    # s count, 2.61/2.31 ±0.23 s consume; 10x 5.85/6.12 ±0.57 s count,
+    # 5.93/6.11 ±0.36 s consume — no cell slower
     # PQ on residuals: train + encode via the existing machinery over a
     # synthetic "embedding" float view is wrong (residuals are already
     # quantized longs) — train directly on the long vectors with
@@ -2183,7 +2181,8 @@ def ivfpq_topk(
         .where(F.col("rank") <= k)
         .select("qid", "id", "d_adc", F.col("rank").cast("int").alias("rank"))
     )
-    # pin A/B for q, ann_ivfpq on/off: 10x 6.5/7.2 s consume (4 pairs),
-    # 6.6/6.6 s count; kq's is at embed_kmeans
-    out = release_cache_on_gc(out, q)
-    return release_cache_on_gc(out, kq)
+    # pin A/B, ann_ivfpq at 10x (± IQR of on runs, 6 pairs): alone, q
+    # off is within noise (5.86/6.13 ±0.62 s count); with the kmeans
+    # projection and resid caches gone too it is not: 5.95/6.93 ±0.54 s
+    # count, 6.11/7.31 ±0.47 s consume, against 5.87/5.87 ±0.56 s with q
+    return release_cache_on_gc(out, q)

@@ -323,10 +323,15 @@ def q_embed_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = simsearch.near_dup_pairs(emb, threshold_dot_q=300_000).select(
         "id_a", "id_b"
     )
-    found = simsearch.rp_lsh_near_dup(
+    found_res = simsearch.rp_lsh_near_dup(
         emb, threshold_dot_q=300_000, dim=64, n_planes=16, band_bits=4
-    ).select("id_a", "id_b", F.lit(1).alias("_hit"))
-    return (
+    )
+    found = found_res.select("id_a", "id_b", F.lit(1).alias("_hit"))
+    # pin_lineage keeps found_res's pin (its A/B: simsearch.rp_lsh_near_dup)
+    # alive past the select, for the driver's action
+    from dataproc_spark.core import pin_lineage
+
+    return pin_lineage(
         truth.join(found, ["id_a", "id_b"], "left")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_truth"),
@@ -342,7 +347,8 @@ def q_embed_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             # domain_mixture zero-total convention (r8 ADVICE)
             "CAST(CASE WHEN n_truth > 0 THEN n_found * 1000 div n_truth "
             "ELSE 0 END AS BIGINT) AS recall_m",
-        )
+        ),
+        found_res,
     )
 
 

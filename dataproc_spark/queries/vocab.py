@@ -861,17 +861,18 @@ def q_nb_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores = classify.score_documents(
         docs, weights, n_buckets=n_buckets,
         bias=bias, intercept=icpt, labels=sorted(bias), features=feats,
-    ).persist()
+    )
     pred = classify.predict_label(scores).select(
         "doc_id", F.col("label").alias("pred_label")
     )
     out = scores.join(pred, "doc_id").select(
         "doc_id", "label", "n_feats", "score", "pred_label"
     )
-    # pin A/B on/off: feats sf0.1 3.5/4.2 s count, 3.8/3.9 s consume;
-    # scores 10x 7.6/8.8 s consume (count, which skips the pred branch,
-    # is faster off: 8.2/6.5 s)
-    return release_cache_on_gc(release_cache_on_gc(out, scores), feats)
+    # pin A/B on/off (± IQR of on runs, 6 pairs): feats sf0.1 3.19/3.59
+    # ±0.32 s count. scores is not persisted: no cell slower off (sf0.1
+    # 3.79/2.73 ±0.65 s count, 3.99/3.52 ±1.09 s consume; 10x 8.75/6.37
+    # ±1.12 s count, 9.94/10.14 ±1.68 s consume)
+    return release_cache_on_gc(out, feats)
 
 
 def _sql_q(c: str, scale: int = 4096) -> str:

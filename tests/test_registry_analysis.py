@@ -127,12 +127,42 @@ _NESTED_LOOP_OK = {
 }
 
 
-def _registered_pins(before: dict, entries: dict) -> set:
-    """Store keys added since ``before``, or whose pin count grew."""
-    return {
-        k for k, v in entries.items()
-        if k not in before or (isinstance(v, int) and v > before[k])
-    }
+def _pin_counts(entries: dict) -> dict:
+    """The cache store's pin counts (its memo entries hold frames)."""
+    return {k: v for k, v in entries.items() if isinstance(v, int)}
+
+
+def _cache_builders(spark) -> dict:
+    """``semanticHash()`` of every plan in the CacheManager -> the cache
+    builder its InMemoryTableScans read (the manager has no public
+    listing, hence the reflection)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    out, it = {}, field.get(cm).iterator()
+    while it.hasNext():
+        cd = it.next()
+        out[cd.plan().semanticHash()] = (
+            cd.cachedRepresentation().cacheBuilder()
+        )
+    return out
+
+
+def _scanned_builders(plan) -> list:
+    """Cache builders read by the InMemoryTableScans of a physical plan,
+    including scans inside the plans of the caches it reads."""
+    out, todo = [], [plan]
+    while todo:
+        it = todo.pop().collectLeaves().iterator()
+        while it.hasNext():
+            leaf = it.next()
+            kind = leaf.getClass().getSimpleName()
+            if kind == "AdaptiveSparkPlanExec":
+                todo.append(leaf.executedPlan())
+            elif kind == "InMemoryTableScanExec":
+                out.append(leaf.relation().cacheBuilder())
+                todo.append(out[-1].cachedPlan())
+    return out
 
 
 @pytest.mark.skipif(
@@ -143,28 +173,39 @@ def _registered_pins(before: dict, entries: dict) -> set:
 )
 def test_registry_plan_has_no_unexpected_nested_loop(spark, name):
     """Also the plan-shape guard on cache pins: every pin the build
-    leaves registered in the application's cache store must survive
-    gc.collect() while the result lives, and must be read by the
-    executed plan (a "persisted" subtree with no InMemoryTableScan is a
-    pin that only holds memory)."""
+    registers in the application's cache store must survive gc.collect()
+    while the result lives, must name a CacheManager entry (else it
+    can never release one), and that cache must be read by an
+    InMemoryTableScan of the executed plan (a pinned cache no scan reads
+    only holds memory)."""
     import gc
 
     from dataproc_spark.core import cache_store
 
     fn, _sql = REGISTRY[name]
     _, entries = cache_store(spark)
-    before = dict(entries)
+    before = _pin_counts(entries)
     df = fn(spark, _SF_DIR)
-    registered = _registered_pins(before, entries)
+
+    def registered():
+        return {k for k, n in _pin_counts(entries).items()
+                if n > before.get(k, 0)}
+
+    pins = registered()
     gc.collect()
-    assert _registered_pins(before, entries) == registered, (
+    assert registered() == pins, (
         f"{name}: a pin registered by the build died with the result live"
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    if registered:
-        assert "InMemoryTableScan" in plan, (
-            f"{name}: pinned a cache its executed plan never reads"
-        )
+    executed = df._jdf.queryExecution().executedPlan()
+    if pins:
+        cached = _cache_builders(spark)
+        scanned = _scanned_builders(executed)
+        for key in pins:
+            assert key in cached, f"{name}: a live pin has no cache entry"
+            assert any(cached[key].equals(b) for b in scanned), (
+                f"{name}: pinned a cache its executed plan never reads"
+            )
+    plan = executed.toString()
     if name in _NESTED_LOOP_OK:
         return
     assert "BroadcastNestedLoopJoin" not in plan, name
