@@ -3,52 +3,20 @@
 JSON line:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is forced with a cheap count() (no driver materialization of
-results). Timings include Spark planning + execution but not session
-startup.
+The whole suite runs $SPARK_GRAFT_BENCH_RUNS times (default 3), each run
+a subprocess with a fresh session; "value" is the median per-run total,
+with the raw totals under "runs" and per-query medians under "queries"
+and "extended". Separate processes, because a second in-session run is
+structurally faster (warm codegen, session-scoped caches). A failed
+query or run nulls "value", so a failure never reads as a speedup.
 
-MEASUREMENT CONTRACT: count() lets Catalyst prune projections and
-aggregate expressions the count does not need, so for aggregate-shaped
-queries the timing under-measures the full expression work (e.g.
-text_stats collapses to a lang-only aggregate). This forcing is KEPT
-deliberately: every BENCH_r*.json since round 1 — including the
-driver-relative baseline the perf gate compares against — was recorded
-with the identical forcing, so the headline total stays comparable
-across rounds; switching to a consuming aggregate would inflate every
-number against the gate's own baseline. Treat per-query values as a
-consistent round-over-round signal, not absolute query cost; use the
-SCALE.md probe harnesses (which force with consuming aggregates) for
-absolute measurements.
-
-WARMUP CHANGE (r15): the warmup now also spawns the Python worker pool
-(one trivial 64-partition Arrow stage) before timing, exactly as it has
-always pre-loaded JVM/codegen/parquet classes — profiling showed the
-first Arrow-path query per child session (resolve_buckets) absorbing
-~2-3 s of one-time worker spawn + pandas import unrelated to its plan.
-Old-protocol comparability: OPTIMIZATION_r15.md records the round's
-headline under BOTH warmups; every other query's number is unaffected.
-
-REPEAT PROTOCOL (r8): machine-load variance made single-run totals
-uninterpretable (r7 was +19% on r6 with the drift uniform across
-untouched queries). The harness now runs the WHOLE suite
-$SPARK_GRAFT_BENCH_RUNS times (default 3) as separate subprocesses —
-each child is bit-identical to the r1–r7 single-run protocol (fresh
-session, same warmup, same count() forcing), so per-run totals remain
-comparable with every prior BENCH_r*.json — and reports the MEDIAN
-per-run total as "value" plus the raw totals under "runs" and
-per-query medians under "queries". In-session repeats were rejected:
-the selective family's session-scoped shard-results cache (and warm
-codegen generally) makes second in-session runs structurally faster,
-which would silently lower the headline against the baseline.
-Set SPARK_GRAFT_BENCH_RUNS=1 for the old single-run behavior.
-
-DRIFT PROTOCOL (r13, from the r12 embed_lsh/revisit adjudication):
-when a SINGLE-query extended median moves >50% round-over-round on
-UNTOUCHED code, re-time the prior round's commit (git worktree at that
-commit, same command, same day) before treating it as a regression —
-in r12 both apparent regressions reproduced on the unchanged r11
-checkout, i.e. they were machine-state drift. The headline
-median-of-3 absorbs this; single-query medians don't.
+Each query is timed from construction through a count(), after
+:func:`warmup`, without session startup. count() lets Catalyst prune
+the computed columns the count does not need, so a per-query value is a
+round-over-round signal, not the query's absolute cost: the forcing is
+kept because every BENCH_r*.json was recorded with it. For absolute
+measurements use ``tools/probe.py --force consume``, which reads every
+output column.
 """
 
 from __future__ import annotations
@@ -236,6 +204,41 @@ def warmup(spark, sf_dir: str) -> None:
         print(f"# warmup failed, continuing cold: {exc}", file=sys.stderr)
 
 
+def run_gate(build, force=lambda df: df.count()):
+    """Build one frame and force it: ``(build_s, action_s, rows, error)``.
+
+    A failure is returned, not raised, so one broken query reports
+    itself instead of aborting the harness and every other timing;
+    the seconds of a phase that did not finish are None.
+    """
+    build_s = action_s = None
+    t0 = time.perf_counter()
+    try:
+        df = build()
+        t1 = time.perf_counter()
+        build_s = t1 - t0
+        rows = force(df)
+        action_s = time.perf_counter() - t1
+        return build_s, action_s, rows, None
+    except Exception as exc:  # noqa: BLE001 — harness boundary
+        return build_s, action_s, None, f"{type(exc).__name__}: {exc}"[:300]
+
+
+def time_queries(spark, sf_dir: str, names, tag: str,
+                 timings: dict, errors: dict) -> None:
+    """Time each registry query in ``names`` with :func:`run_gate` into
+    ``timings`` (build + count seconds) or ``errors``."""
+    qs = registry.queries()
+    for name in names:
+        build_s, action_s, _, err = run_gate(lambda: qs[name](spark, sf_dir))
+        if err is None:
+            timings[name] = round(build_s + action_s, 3)
+            print(f"# {tag}{name}: {timings[name]}s", file=sys.stderr)
+        else:
+            errors[name] = err
+            print(f"# {tag}{name}: ERROR {err}", file=sys.stderr)
+
+
 def run_repeats(n_runs: int) -> None:
     """Parent mode of the repeat protocol: run the single-run harness
     ``n_runs`` times as SUBPROCESSES (each a fresh JVM + session — the
@@ -310,33 +313,11 @@ def main() -> None:
 
     warmup(spark, sf_dir)
 
-    qs = registry.queries()
     timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    # per-query isolation: one broken query must report itself, not abort
-    # the harness and destroy every other timing (rounds 3/4 had rc=1 and
-    # zero performance data because events_hourly threw here)
-    for name in BENCH_QUERIES:
-        t0 = time.perf_counter()
-        try:
-            df = qs[name](spark, sf_dir)
-            df.count()
-            timings[name] = round(time.perf_counter() - t0, 3)
-            print(f"# {name}: {timings[name]}s", file=sys.stderr)
-        except Exception as exc:  # noqa: BLE001 — harness boundary
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-            print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
-
     extended: dict[str, float] = {}
-    for name in EXTENDED_QUERIES:
-        t0 = time.perf_counter()
-        try:
-            qs[name](spark, sf_dir).count()
-            extended[name] = round(time.perf_counter() - t0, 3)
-            print(f"# ext {name}: {extended[name]}s", file=sys.stderr)
-        except Exception as exc:  # noqa: BLE001 — harness boundary
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-            print(f"# ext {name}: ERROR {errors[name]}", file=sys.stderr)
+    errors: dict[str, str] = {}
+    time_queries(spark, sf_dir, BENCH_QUERIES, "", timings, errors)
+    time_queries(spark, sf_dir, EXTENDED_QUERIES, "ext ", extended, errors)
 
     # a round with errors must not report a SMALLER (faster-looking)
     # headline from the surviving queries — null the total so consumers

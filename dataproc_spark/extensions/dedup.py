@@ -236,7 +236,6 @@ def lsh_candidates(
     bands: int = 16,
     num_hashes: int | None = None,
     portable: bool = False,
-    salt: int | None = None,
 ) -> DataFrame:
     """Candidate pairs from LSH banding: ids sharing ≥1 (band, band-hash).
 
@@ -244,34 +243,13 @@ def lsh_candidates(
     equi-join on (band, hash) with ``id_left < id_right`` yields candidate
     pairs. This is the scale path: the join is a hash shuffle on band keys
     — documents only meet if a band collides, never all-pairs. Skewed
-    buckets (boilerplate shingles) are handled by AQE skew-join splitting;
-    ``salt`` > 1 switches to an explicit :func:`skew.salted_join` for the
-    pathological-bucket case AQE cannot split (same pairs, measured
-    trade-off in SCALE.md).
+    buckets (boilerplate shingles) are handled by AQE skew-join splitting
+    (explicit salting never beat it, SCALE.md §salting A/B).
 
     Pass ``num_hashes`` when known to avoid a plan-time job probing the
     signature length.
     """
     banded = band_rows(sigs, id_col, bands, num_hashes, portable)
-    if salt is not None and int(salt) > 1:
-        # explicit salting for when AQE's skew split is insufficient (one
-        # pathological band bucket): scatter the left side across `salt`
-        # buckets, replicate the right side into each, join on
-        # (band, bhash, salt). The right side is multiplied by `salt`, so
-        # this trades salt× more shuffled bytes for a salt-way split of
-        # the hottest bucket — a net LOSS on mild skew (measured in
-        # SCALE.md §salting A/B); reach for it only past the skew_report
-        # threshold.
-        from dataproc_spark import skew as _skew
-
-        la = banded.select(F.col(id_col).alias("id_a"), "band", "bhash")
-        rb = banded.select(F.col(id_col).alias("id_b"), "band", "bhash")
-        return (
-            _skew.salted_join(la, rb, ["band", "bhash"], salt=int(salt))
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
     left = banded.alias("l")
     right = banded.alias("r")
     return (

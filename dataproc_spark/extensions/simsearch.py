@@ -170,7 +170,6 @@ def bucketed_topk(
     vec_col: str = "embedding",
     bucket_col: str = "label",
     scale: int = 1000,
-    salt: int | None = None,
     exclude_self: bool = True,
 ) -> DataFrame:
     """IVF-style approximate top-k: score only candidates in the query's
@@ -181,14 +180,6 @@ def bucketed_topk(
     becomes an equi-join on the bucket id — at 100 TB this is the difference
     between a cross join and a shuffle bounded by the probed cells. Probing
     n > 1 cells = unioning n bucket keys per query before the join.
-
-    ``salt`` > 1 two-phases the top-k (the classic skewed-top-k split):
-    a partial top-k per (qid, salt-bucket) first, so a query whose cell
-    holds a huge candidate population sorts `salt` small partitions in
-    parallel instead of one giant one, then the final window ranks only
-    the surviving ``salt × k`` rows per query. Exactly the same result —
-    every global top-k row is in some partial top-k — for one extra
-    (tiny) shuffle; measured trade-off in SCALE.md.
     """
     q = queries.select(
         F.col(id_col).alias("qid"),
@@ -206,18 +197,6 @@ def bucketed_topk(
         scored = scored.where(F.col(id_col) != F.col("qid"))
     scored = scored.withColumn("dot_q", dot_q("_qv", "_cv"))
     w = Window.partitionBy("qid").orderBy(F.col("dot_q").desc(), F.col(id_col).asc())
-    if salt is not None and int(salt) > 1:
-        from dataproc_spark import skew as _skew
-
-        wp = Window.partitionBy("qid", _skew.SALT).orderBy(
-            F.col("dot_q").desc(), F.col(id_col).asc()
-        )
-        scored = (
-            _skew.with_salt(scored, int(salt))
-            .withColumn("_prnk", F.row_number().over(wp))
-            .where(F.col("_prnk") <= k)
-            .drop("_prnk", _skew.SALT)
-        )
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= k)

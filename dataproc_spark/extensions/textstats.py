@@ -763,7 +763,7 @@ def bpe_learn_merges(
 #: refused: a codegen expression tree tens of thousands of replaces deep
 #: compiles slowly (or falls back to interpreted eval) — the production
 #: path for a full 30k-merge vocabulary is the Arrow kernel below
-# measured bound (tools/bench_bpe_apply.py, SCALE.md §r8): at 512
+# measured bound (SCALE.md §r8 "BPE apply"): at 512
 # chained replaces the driver-side column-node-to-expression conversion
 # recurses past the default JVM stack and throws StackOverflowError
 # before the job even starts; 256 converts and runs. The Arrow kernel

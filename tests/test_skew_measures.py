@@ -362,40 +362,58 @@ def test_select_under_budget_requires_columns(spark):
         select_under_budget(df, 10)
 
 
-def test_lsh_candidates_salted_equals_unsalted(spark):
-    """salt only redistributes the band self-join — the candidate pair
-    set must be identical to the unsalted plan."""
+def test_lsh_candidates_matches_python_banding_model(spark):
+    """The band self-join returns exactly the id pairs (a < b) whose
+    signatures agree on every position of at least one band, checked
+    against a brute-force pass over the collected signatures."""
     rows = [(i, f"common text block shared by near dups variant {i % 3}")
             for i in range(30)]
     docs = spark.createDataFrame(rows, schema="doc_id long, text string")
     sigs = dedup.minhash_frame(docs, "text", "doc_id", num_hashes=16,
-                               shingle_size=2).persist()
-    plain = {(r.id_a, r.id_b) for r in
-             dedup.lsh_candidates(sigs, bands=4, num_hashes=16).collect()}
-    salted = {(r.id_a, r.id_b) for r in
-              dedup.lsh_candidates(sigs, bands=4, num_hashes=16,
-                                   salt=4).collect()}
-    assert salted == plain and len(plain) > 0
+                               shingle_size=2)
+    got = {(r.id_a, r.id_b) for r in
+           dedup.lsh_candidates(sigs, bands=4, num_hashes=16).collect()}
+
+    sig = {r.doc_id: list(r._sig) for r in sigs.collect()}
+    want = {
+        (a, b) for a in sig for b in sig
+        if a < b and any(sig[a][i:i + 4] == sig[b][i:i + 4]
+                         for i in range(0, 16, 4))
+    }
+    assert got == want and len(want) > 0
 
 
-def test_bucketed_topk_salted_equals_unsalted(spark):
-    """Two-phase top-k must return exactly the global top-k: every
-    (qid, rank) row identical to the single-window plan."""
+def test_bucketed_topk_matches_python_model(spark):
+    """Every (qid, rank) row equals a brute-force top-k over the query's
+    own bucket: quantized dot product descending, id ascending, the query
+    itself excluded."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     import numpy as np
 
-    from dataproc_spark.extensions import simsearch
-
     rng = np.random.RandomState(7)
+    data = [(i, int(i % 2), rng.rand(8).tolist()) for i in range(200)]
     emb = spark.createDataFrame(
-        [(i, int(i % 2), rng.rand(8).tolist()) for i in range(200)],
-        schema="vec_id long, label int, embedding array<double>",
+        data, schema="vec_id long, label int, embedding array<double>"
     )
     qs = emb.where(F.col("vec_id") < 4)
-    plain = {(r.qid, r.rnk): r.vec_id for r in
-             simsearch.bucketed_topk(emb, qs, k=5).collect()}
-    salted = {(r.qid, r.rnk): r.vec_id for r in
-              simsearch.bucketed_topk(emb, qs, k=5, salt=8).collect()}
-    assert salted == plain and len(plain) == 4 * 5
+    got = {(r.qid, r.rnk): (r.vec_id, r.dot_q) for r in
+           simsearch.bucketed_topk(emb, qs, k=5).collect()}
+
+    def quant(v):  # Spark's round() is HALF_UP on the double's value
+        return [int(Decimal(x * 1000).quantize(Decimal(1), ROUND_HALF_UP))
+                for x in v]
+
+    q = {i: quant(v) for i, _, v in data}
+    want = {}
+    for qid, qlabel, _ in data[:4]:
+        ranked = sorted(
+            ((-sum(a * b for a, b in zip(q[qid], q[i])), i)
+             for i, label, _ in data if label == qlabel and i != qid)
+        )[:5]
+        want.update({(qid, rnk + 1): (i, -neg)
+                     for rnk, (neg, i) in enumerate(ranked)})
+    assert got == want and len(want) == 4 * 5
 
 
 def test_maxdf_persist_released_on_gc(spark):
