@@ -115,9 +115,11 @@ def get_spark(
     """Session factory with scale-appropriate defaults.
 
     AQE is enabled so shuffle partition counts and skew joins self-tune at
-    cluster scale; locally we pin ``spark.sql.shuffle.partitions`` to the
-    core count to avoid tiny-task overhead. Session timezone is UTC so
-    timestamp formatting is deterministic across environments.
+    cluster scale; ``spark.sql.shuffle.partitions`` defaults to 32 (or
+    ``shuffle_partitions``), and AQE coalesces the small ones at run time.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, else
+    ``local[*]``. Session timezone is UTC so timestamp formatting is
+    deterministic across environments.
     """
     import os
 

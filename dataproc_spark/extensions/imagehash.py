@@ -162,9 +162,9 @@ def _decode_any(payload: bytes):
     else (the quarantine contract both decoders already follow)."""
     buf = bytes(payload)
     if buf[:2] == b"\xFF\xD8":
-        from dataproc_spark.extensions.jpeg import decode_jpeg_fast
+        from dataproc_spark.extensions.jpeg import decode_jpeg
 
-        return decode_jpeg_fast(buf)
+        return decode_jpeg(buf)
     from dataproc_spark.extensions.multimodal import _decode_image_bytes
 
     return _decode_image_bytes(buf)

@@ -36,18 +36,14 @@ and mostly progressive — so the image decode path
   the DC survives unit quantization), which is what makes the
   ``multimodal_jpeg`` gate arithmetically oracle-able — the same trick
   ``audio_decode`` used for WAV.
-* :func:`decode_jpeg_fast` — the C-codec seam: same contract and (by
-  marker pre-validation) the same ACCEPT SURFACE, with libjpeg doing
-  the entropy work when PIL is importable and the flag is set; pure
-  fallback otherwise.
 
 Scale note: the entropy loop is per-block Python — fine for the
 gate-scale payloads it is tested on, and the honest statement of this
-environment (no C codec available). At 100 TB the seam is unchanged:
-these functions run inside the same Arrow ``mapInPandas`` kernels, and
-routing through :func:`decode_jpeg_fast` swaps in libjpeg with zero
-plan change. The metadata path (:func:`parse_jpeg_meta`) has no such
-caveat — it touches only the marker headers.
+environment (no C codec available). These functions run inside the
+Arrow ``mapInPandas`` kernels, so a C decoder with the same contract
+and accept surface would swap in with no plan change. The metadata path
+(:func:`parse_jpeg_meta`) has no such caveat — it touches only the
+marker headers.
 """
 
 from __future__ import annotations
@@ -1315,124 +1311,6 @@ def decode_jpeg(buf: bytes):
             np.uint8
         )[:, :, None]
     return w, h, ncomp, out
-
-
-# ---------------------------------------------------------------------------
-# C-codec seam (optional fast path)
-# ---------------------------------------------------------------------------
-
-def _pil_image():
-    """PIL.Image if importable, else None — probed lazily so the module
-    never hard-depends on an image library."""
-    try:
-        from PIL import Image  # noqa: PLC0415
-
-        return Image
-    except ImportError:
-        return None
-
-
-@_valueerror_boundary
-def _check_pure_supported(buf: bytes) -> None:
-    """Raise ``ValueError`` unless the stream is within the pure
-    decoder's accept surface (SOF0/1/2, 8-bit, 1 or 3 components,
-    sampling factors in {1, 2}; restart intervals and 4:2:0/4:2:2
-    subsampling are accepted on BOTH paths since r11). The C-codec path
-    runs this BEFORE handing bytes to libjpeg: PIL would happily decode
-    CMYK / 12-bit / exotic-sampling streams the pure path quarantines,
-    and corpus membership must not depend on which machine (or flag)
-    ran the job (r10 review finding)."""
-    buf = bytes(buf)  # once — a per-segment copy would be O(n²)
-    saw_sof = False
-    for marker, start, ln in _walk_segments(buf):
-        data = buf[start:start + ln]
-        if marker in _SOF_MARKERS:
-            if marker not in (0xC0, 0xC1, 0xC2):
-                raise ValueError(
-                    f"unsupported SOF marker 0xFF{marker:02X}"
-                )
-            precision, _h, _w, ncomp = struct.unpack(">BHHB", data[:6])
-            if precision != 8:
-                raise ValueError(f"unsupported precision {precision}")
-            if ncomp not in (1, 3):
-                raise ValueError(f"unsupported component count {ncomp}")
-            for i in range(ncomp):
-                samp = data[7 + 3 * i]
-                hi, vi = samp >> 4, samp & 15
-                if hi not in (1, 2) or vi not in (1, 2):
-                    raise ValueError(
-                        f"unsupported sampling factor {hi}x{vi}"
-                    )
-            saw_sof = True
-    if not saw_sof:
-        raise ValueError("JPEG missing SOF header")
-
-
-def _is_subsampled(buf: bytes) -> bool:
-    """True when any SOF component's sampling factors differ — i.e.
-    chroma is subsampled and the decode result depends on the
-    upsampling strategy (decoder-defined, not T.81-prescribed)."""
-    buf = bytes(buf)
-    for marker, start, ln in _walk_segments(buf):
-        if marker in _SOF_MARKERS:
-            data = buf[start:start + ln]
-            ncomp = data[5]
-            samps = {data[7 + 3 * i] for i in range(ncomp)}
-            return len(samps) > 1
-    return False
-
-
-def decode_jpeg_fast(buf: bytes, use_c_codec: bool | None = None):
-    """The documented C-codec seam: same ``(w, h, channels, pixels)``
-    contract as :func:`decode_jpeg`, but when ``use_c_codec`` is true
-    (default: the ``DATAPROC_JPEG_C_CODEC=1`` environment flag) and PIL
-    is importable, the entropy decode runs in libjpeg instead of the
-    pure-Python loop — a constant-factor swap with ZERO plan change
-    (the Arrow kernels call this function either way). Falls back to
-    the pure decoder when PIL is absent, and the pure decoder remains
-    the deterministic path every oracle gate runs on (libjpeg's IDCT is
-    allowed ±1 rounding on non-exact images; on the gate's bit-exact
-    block-constant fixtures the two paths must agree exactly —
-    asserted by ``test_jpeg_c_codec_seam`` whenever PIL exists).
-    The accept SURFACE is identical by construction: the stream is
-    marker-validated against the pure decoder's restrictions before
-    libjpeg sees it, so a CMYK/12-bit/exotic-sampling payload
-    quarantines on every machine, flag or no flag.
-
-    SUBSAMPLED streams always take the pure path, flag or no flag
-    (r11 review finding): chroma upsampling is decoder-defined —
-    libjpeg interpolates ("fancy" triangle filter) where this module
-    replicates — so on varying-chroma content the two decoders differ
-    far beyond the ±1 IDCT allowance, and pixel statistics must not
-    depend on which machine ran the job. Restart markers stay on the
-    C path: they are framing, not pixel math."""
-    import os
-
-    if use_c_codec is None:
-        use_c_codec = os.environ.get("DATAPROC_JPEG_C_CODEC", "") == "1"
-    if use_c_codec:
-        Image = _pil_image()
-        if Image is not None:
-            _check_pure_supported(buf)
-            if _is_subsampled(buf):
-                return decode_jpeg(buf)
-            import io
-
-            import numpy as np
-
-            try:
-                with Image.open(io.BytesIO(bytes(buf))) as im:
-                    im.load()
-                    if im.mode not in ("L", "RGB"):
-                        im = im.convert("RGB")
-                    arr = np.asarray(im, dtype=np.uint8)
-            except Exception as exc:
-                raise ValueError(f"malformed JPEG stream (libjpeg: {exc})")
-            if arr.ndim == 2:
-                arr = arr[:, :, None]
-            h, w, c = arr.shape
-            return w, h, c, arr
-    return decode_jpeg(buf)
 
 
 def insert_jpeg_segment(buf: bytes, marker: int, payload: bytes) -> bytes:

@@ -2,8 +2,7 @@
 any crawl, and the r12 verdict's final frontier item. Two tiers behind
 one operator:
 
-* **pypdf seam** (optional, import-try — the ``decode_jpeg_fast``
-  pattern): when the library is installed the extraction delegates to
+* **pypdf seam** (optional, import-try): when the library is installed the extraction delegates to
   it per row, covering the general case (CID/Type0 fonts, object
   streams, encrypted-empty, predictors).
 * **pure-Python core** (always available): exact for the
@@ -15,8 +14,8 @@ one operator:
   PDFDocEncoding≈latin-1 — deterministic either way. CID/Type0 fonts,
   object streams (``/ObjStm``), LZW/ASCII85 filters, and encryption
   are OUT of the pure core's scope: their streams simply contribute
-  no text (or quarantine on filter errors) — exactly the honest local
-  bound the JPEG codec documents for its seam.
+  no text (or quarantine on filter errors) — the same honest local
+  bound the pure JPEG codec documents.
 
 Rows that are not PDFs or fail mid-parse QUARANTINE (NULL text + a
 stable error code) rather than abort the job — the only viable

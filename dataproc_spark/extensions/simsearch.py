@@ -757,69 +757,51 @@ def rp_lsh_near_dup(
     return release_cache_on_gc(out, e)
 
 
-#: centroid-table size (k × dim literal terms) above which
-#: :func:`_kmeans_assign` switches from the expression plan to the Arrow
-#: matmul kernel — below it the all-JVM expression wins (no Python
-#: worker round-trip); far above it the expression is pathological
-#: (k zip_with aggregates per row stop fitting whole-stage codegen and
-#: fall back to interpreted eval: the k=400/dim=64 semantic_dedup probe
-#: ran >30 min at 100× before this kernel, ~2 min after — SCALE.md r15).
-#: r15 opt: lowered 4096 → 128 after an interleaved A/B at the gate
-#: geometry (k=8 × dim=64 = 512 terms, sf0.1): the expression path costs
-#: ~2 s of fresh codegen per assignment — centroid literals CHANGE every
-#: Lloyd iteration, so nothing is ever compiled twice — and trains in
-#: 5.9 s warm vs 2.1 s through the Arrow kernel. Only toy geometries
-#: (k × dim ≤ 128, e.g. 8 × 16 unit fixtures) keep the literal plan.
-_KMEANS_ARROW_THRESHOLD = 128
+def _nearest_centroid(centroids: list[tuple[int, list[int]]]):
+    """``(cids, nearest)`` for a cid-ascending centroid table:
+    ``nearest(x)`` maps an (n, dim) int64 batch to each row's index of
+    the argmin squared distance ``||x||² − 2xCᵀ + ||c||²`` in exact
+    int64; np.argmin's first minimum is the smallest cid on ties. The
+    model lives in the kernel closure, not in plan literals, so a Lloyd
+    round's fresh centroids cost no Catalyst re-analysis of a
+    k × dim literal tree (SCALE.md r15)."""
+    import numpy as np
+
+    cids = np.array([cid for cid, _ in centroids], dtype=np.int64)
+    cmat = np.array([c for _, c in centroids], dtype=np.int64)
+    cnorm = (cmat * cmat).sum(axis=1)
+
+    def nearest(x):
+        d = (x * x).sum(axis=1, keepdims=True) - 2 * (x @ cmat.T) + cnorm
+        return np.argmin(d, axis=1)
+
+    return cids, nearest
 
 
 def _kmeans_assign(
     q: DataFrame, centroids: list[tuple[int, list[int]]]
 ) -> DataFrame:
-    """Map-only cluster assignment against the centroid table: argmin
-    squared distance, ties to the smallest centroid id. Small tables
-    travel as plan literals (array_min over (dist, cid) structs —
-    lexicographic, all-JVM); past :data:`_KMEANS_ARROW_THRESHOLD`
-    literal terms the same argmin runs as one Arrow matmul stage
-    (``||x||² − 2xCᵀ + ||c||²`` in exact int64, np.argmin's
-    first-minimum = smallest cid over the cid-ascending table —
-    bit-identical by construction, parity-pinned by test)."""
-    if centroids and len(centroids) * len(centroids[0][1]) > _KMEANS_ARROW_THRESHOLD:
-        import numpy as np
-        import pandas as pd
+    """Map-only cluster assignment against the centroid table as one
+    Arrow stage: argmin squared distance, ties to the smallest centroid
+    id (:func:`_nearest_centroid`). ``cluster`` is INT; an empty table
+    assigns NULL."""
+    if not centroids:
+        return q.withColumn("cluster", F.lit(None).cast("int"))
+    import numpy as np
 
-        cids = np.array([cid for cid, _ in centroids], dtype=np.int64)
-        cmat = np.array([c for _, c in centroids], dtype=np.int64)
-        cnorm = (cmat * cmat).sum(axis=1)
-        other = [c for c in q.columns if c != "_v"]
+    cids, nearest = _nearest_centroid(centroids)
 
-        def kernel(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                x = np.array(pdf["_v"].tolist(), dtype=np.int64)
-                d = ((x * x).sum(axis=1, keepdims=True)
-                     - 2 * (x @ cmat.T) + cnorm)
-                pdf = pdf.assign(cluster=cids[np.argmin(d, axis=1)])
-                yield pdf
+    def kernel(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            x = np.array(pdf["_v"].tolist(), dtype=np.int64)
+            yield pdf.assign(cluster=cids[nearest(x)].astype(np.int32))
 
-        schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in q.schema.fields
-        ) + ", cluster long"
-        out = q.mapInPandas(kernel, schema)
-        # the expression path yields an INT cluster (the struct literal);
-        # keep the public dtype identical across paths
-        return out.withColumn("cluster", F.col("cluster").cast("int"))
-    cands = []
-    for cid, c in centroids:
-        lit = F.array(*[F.lit(int(x)).cast("long") for x in c])
-        d = F.aggregate(
-            F.zip_with(F.col("_v"), lit, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        cands.append(F.struct(d.alias("d"), F.lit(int(cid)).alias("cid")))
-    return q.withColumn("cluster", F.array_min(F.array(*cands))["cid"])
+    schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in q.schema.fields
+    ) + ", cluster int"
+    return q.mapInPandas(kernel, schema)
 
 
 def _trunc_div(a: int, b: int) -> int:
@@ -830,22 +812,6 @@ def _trunc_div(a: int, b: int) -> int:
     Python's ``//`` FLOORS and would drift on negative sums."""
     q = abs(a) // abs(b)
     return q if (a >= 0) == (b >= 0) else -q
-
-
-def _mean_update_rows(df: DataFrame, keys: list, vec_col: str, dim: int):
-    """Collected rows for a centroid update in ONE exchange (r15 opt,
-    guide §2.3 "aggregate before you shuffle"): per-``keys`` count plus
-    one ``sum`` per dimension over the array column — all partial
-    map-side, shuffle carries |keys| rows of (dim+1) longs. The
-    replaced shape ``posexplode → groupBy(keys, dim) → groupBy(keys)
-    collect_list`` multiplied shuffle rows ×dim and paid TWO exchanges
-    per Lloyd round. Callers derive means via :func:`_trunc_div` —
-    identical integer arithmetic to the old ``s div n`` column."""
-    aggs = [F.count(F.lit(1)).alias("_n")] + [
-        F.sum(F.element_at(F.col(vec_col), i + 1)).alias(f"_s{i}")
-        for i in range(dim)
-    ]
-    return df.groupBy(*keys).agg(*aggs).collect()
 
 
 def _combine_partials(rows) -> dict:
@@ -879,28 +845,24 @@ def _kmeans_iter_update(
     kernel rounds measure ~0.48 s). The shuffle disappears entirely —
     each task emits ≤ k partial rows, the driver combines ≤ k ×
     partitions rows (bounded, never corpus-sized). Bit-exactness: the
-    argmin is :func:`_kmeans_assign`'s Arrow formula unchanged;
-    np.add.at/np.bincount are exact int64 sums; integer addition is
-    order-independent, so the combined sums equal the JVM aggregate's
-    (parity-pinned by test)."""
+    argmin is :func:`_nearest_centroid`, the one :func:`_kmeans_assign`
+    runs; np.add.at/np.bincount are exact int64 sums; integer addition
+    is order-independent, so the combined sums equal an exact integer
+    aggregate's (parity-pinned by test)."""
     import numpy as np
     import pandas as pd
 
-    cids = np.array([cid for cid, _ in centroids], dtype=np.int64)
-    cmat = np.array([c for _, c in centroids], dtype=np.int64)
-    cnorm = (cmat * cmat).sum(axis=1)
-    k = len(cids)
+    cids, nearest = _nearest_centroid(centroids)
+    k, dim = len(centroids), len(centroids[0][1])
 
     def kernel(batches):
         counts = np.zeros(k, dtype=np.int64)
-        sums = np.zeros((k, cmat.shape[1]), dtype=np.int64)
+        sums = np.zeros((k, dim), dtype=np.int64)
         for pdf in batches:
             if not len(pdf):
                 continue
             x = np.array(pdf["_v"].tolist(), dtype=np.int64)
-            d = ((x * x).sum(axis=1, keepdims=True)
-                 - 2 * (x @ cmat.T) + cnorm)
-            a = np.argmin(d, axis=1)
+            a = nearest(x)
             counts += np.bincount(a, minlength=k)
             np.add.at(sums, a, x)
         hit = np.nonzero(counts)[0]
@@ -986,13 +948,15 @@ def _embed_kmeans_impl(
       clusters that empty out are dropped (both engines see the same
       survivor set).
 
-    Scale: assignment is MAP-ONLY — centroids travel to executors as
-    plan literals, the O(k·dim) centroid table is the only thing the
-    driver ever holds (the same contract as MLlib's per-iteration
-    centroid broadcast; corpus rows never collect). The update is one
-    (cluster, dim)-keyed aggregate per iteration — partial map-side
-    combine, then ≤ k·dim rows. Iterations are a fixed small count, the
-    caller's knob, so lineage stays shallow (no checkpoint needed).
+    Scale: assignment is MAP-ONLY — centroids travel to executors in
+    the Arrow kernel's closure, the O(k·dim) centroid table is the only
+    thing the driver ever holds (the same contract as MLlib's
+    per-iteration centroid broadcast; corpus rows never collect). Each
+    Lloyd round is one map-only kernel emitting per-partition
+    (cluster, count, sums) partials, ≤ k × partitions rows combined
+    driver-side (:func:`_kmeans_iter_update`). Iterations are a fixed
+    small count, the caller's knob, so lineage stays shallow (no
+    checkpoint needed).
 
     Returns ``(assigned, centroids, dim, seed)``: the final
     assignment frame carrying (id, cluster, _v) over the validated
@@ -1024,7 +988,7 @@ def _embed_kmeans_impl(
         ):
             # seed vectors are validated DRIVER-side (the executor guard
             # below derives its dim from them, so a bad seed would crash
-            # with an opaque int(None) while building centroid literals)
+            # with an opaque numpy error inside the kernel)
             raise ValueError(
                 "embed_kmeans: seed vectors must be same-length with no "
                 f"NULL elements; offending {id_col}={r[id_col]!r}"
@@ -1033,10 +997,9 @@ def _embed_kmeans_impl(
         if i < k:
             centroids.append((i, list(v)))
     if centroids:
-        # NULL or wrong-length vectors would otherwise assign to cluster
-        # 0 silently: every distance aggregates to NULL and the
-        # (dist, cid) struct min sorts the NULL first (r8 follow-up
-        # review finding; the same raise policy as rp_lsh_near_dup).
+        # NULL or wrong-length vectors get a named error here instead
+        # of an opaque numpy one inside the kernel (the same raise
+        # policy as rp_lsh_near_dup).
         dim = len(centroids[0][1])
         q = q.select(
             F.col(id_col),
@@ -1064,30 +1027,10 @@ def _embed_kmeans_impl(
     for _ in range(iters):
         if not centroids:
             break  # empty input: nothing to assign or update
-        if len(centroids) * dim > _KMEANS_ARROW_THRESHOLD:
-            # fused assign+partials kernel (r15 opt round 2): one
-            # map-only job per round, no wide fresh-plan aggregate —
-            # see _kmeans_iter_update for the measured plan-freshness
-            # cost it removes. Bit-identical means via _trunc_div.
-            comb = _kmeans_iter_update(q, centroids)
-            centroids = sorted(
-                (cid, [_trunc_div(x, n) for x in s])
-                for cid, (n, s) in comb.items()
-            )
-            continue
-        assigned = _kmeans_assign(q, centroids)
-        # one-exchange update (r15 opt): count + per-dim sums with
-        # map-side combine; means derived driver-side with _trunc_div
-        # — bit-identical to the old per-(cluster, dim) `s div n`
-        rows = _mean_update_rows(
-            assigned.select("cluster", "_v"), ["cluster"], "_v", dim
-        )
+        comb = _kmeans_iter_update(q, centroids)
         centroids = sorted(
-            (
-                r["cluster"],
-                [_trunc_div(r[f"_s{i}"], r["_n"]) for i in range(dim)],
-            )
-            for r in rows
+            (cid, [_trunc_div(x, n) for x in s])
+            for cid, (n, s) in comb.items()
         )
     out = _kmeans_assign(q, centroids).select(id_col, "cluster", "_v")
     return out, centroids, dim, seed
@@ -1391,9 +1334,9 @@ def semantic_dedup(
     dot (scale² × cosine for unit-norm embeddings — the SemDeDup
     setting; L2-normalize upstream if the corpus isn't).
 
-    100 TB plan: k-means assignment is map-only against literal
-    centroids (train iterations aggregate (cluster, dim) rows, never
-    collect the corpus); the pair join is cell-bucketed — the same
+    100 TB plan: k-means assignment is map-only against kernel-closure
+    centroids (train iterations combine ≤ k × partitions partial rows,
+    never collect the corpus); the pair join is cell-bucketed — the same
     never-all-pairs shape as every near-dup path here, with cell
     granularity (``k``) the skew knob: size k so the biggest cell's
     self-join stays in memory (the paper also prunes within-cell pairs

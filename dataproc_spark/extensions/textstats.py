@@ -1,9 +1,9 @@
 """Text analysis operators: token statistics, n-gram language ID,
 quality signals, document fingerprinting.
 
-All built-in column expressions (split/filter/length/md5 + higher-order
-functions) — no Python in the data path, so every operator scales as a
-map-only stage feeding a hash aggregate.
+Built-in column expressions (split/filter/length/md5 + higher-order
+functions), so every operator scales as a map-only stage feeding a hash
+aggregate; the one Python data path is :func:`bpe_apply`'s Arrow kernel.
 """
 
 from __future__ import annotations
@@ -153,19 +153,6 @@ def _lang_norm(col: str | F.Column) -> F.Column:
     c = F.col(col) if isinstance(col, str) else col
     inner = F.trim(F.regexp_replace(F.lower(c), r"[ \t\r\n]+", " "))
     return F.concat(F.lit(" "), inner, F.lit(" "))
-
-
-def lang_trigram_scores(col: str | F.Column = "text") -> dict:
-    """Integer rank-weighted trigram score per candidate language:
-    ``Σ rank_weight(g) · count(g)`` over the profile, with counts from
-    the same length-difference trick as :func:`occurrences` (so counts
-    are of non-overlapping matches — the deterministic, engine-portable
-    definition both sides share). Pure string-op Column expressions in
-    whole-stage codegen — an earlier draft looked the trigrams up via a
-    plan-literal map inside an ``aggregate`` lambda, which rebuilt the
-    60-node map PER CHARACTER and ran ~10× slower at gate scale.
-    Map-only, zero shuffles; NULL text scores 0 for every language."""
-    return _scores_of_norm(_lang_norm(col))
 
 
 def _scores_of_norm(s: F.Column) -> dict:
@@ -759,40 +746,6 @@ def bpe_learn_merges(
     return merges
 
 
-#: above this many merge rules the chained-replace Column expression is
-#: refused: a codegen expression tree tens of thousands of replaces deep
-#: compiles slowly (or falls back to interpreted eval) — the production
-#: path for a full 30k-merge vocabulary is the Arrow kernel below
-# measured bound (SCALE.md §r8 "BPE apply"): at 512
-# chained replaces the driver-side column-node-to-expression conversion
-# recurses past the default JVM stack and throws StackOverflowError
-# before the job even starts; 256 converts and runs. The Arrow kernel
-# also simply WINS from ~tens of rules up at any real corpus size
-# (82 rules, sf0.1: 2.2 s expr vs 1.1 s arrow; 10x corpus: 10.3 s vs
-# 5.3 s; arrow is flat ~1.1 s out to 1024 rules), so the expression
-# path is for small rule tables and oracle replay, not production
-# vocabularies.
-BPE_EXPR_MAX_MERGES = 256
-
-
-def _bpe_symbolized(text_col: str) -> F.Column:
-    """Whitespace words → one space-sentineled symbol string per row:
-    ``'a bc'`` → ``' a  b c '``. Word boundaries carry DOUBLE spaces, so
-    no merge pattern (``' x y '``, single spaces) can ever match across
-    words — concatenating is therefore equivalent to merging per-word,
-    and the replace chain runs once per row instead of once per word."""
-    words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-    sym = F.transform(
-        words,
-        lambda w: F.concat(
-            F.lit(" "),
-            F.array_join(F.filter(F.split(w, ""), lambda c: c != ""), " "),
-            F.lit(" "),
-        ),
-    )
-    return F.concat_ws("", sym)
-
-
 def bpe_apply(
     docs: DataFrame,
     merges: list[tuple[int, str, str, int]],
@@ -807,67 +760,34 @@ def bpe_apply(
     real BPE counts instead of the pre-merge surrogate
     (:func:`bpe_token_count`).
 
-    Map-only: symbolize (split + per-char explode into a sentinel-space
-    string), then one non-overlapping JVM ``replace`` per merge rule in
-    rank order — the exact semantics the trainer optimized for
-    (see :func:`bpe_learn_merges` on the deliberate adjacent-repeat
-    divergence from canonical greedy BPE), so train and apply are
-    bit-consistent and the whole pass is oracle-replayable. No shuffle,
-    no Python; the expression chain is O(n_merges) deep, which the
-    measured bound caps at ``BPE_EXPR_MAX_MERGES`` (the driver-side
-    plan conversion stack-overflows at 512 — see the constant's note).
-    For anything beyond small rule tables use :func:`bpe_apply_arrow`
-    (same semantics, Arrow-batched kernel, constant plan depth — and
-    measured FASTER from ~tens of rules up at every probed corpus
-    size).
+    Map-only Arrow kernel (``mapInPandas``), zero shuffles: the merge
+    list ships to executors inside the serialized kernel (a few hundred
+    KB for a 30k-rule vocabulary — closure broadcast, not a join), and
+    each word is symbolized (``'ab'`` → ``' a b '``) and rewritten with
+    one non-overlapping left-to-right ``str.replace`` per rule in rank
+    order — the exact semantics the trainer optimized for (see
+    :func:`bpe_learn_merges` on the deliberate adjacent-repeat
+    divergence from canonical greedy BPE), and those of JVM/DuckDB
+    ``replace``, so train and apply are bit-consistent and the pass is
+    oracle-replayable. Plan depth is constant in the rule count
+    (SCALE.md §r8 "BPE apply": about 2× the speed of a chained-replace
+    expression at every rule count, which also overflowed the driver
+    stack at 512 rules). An existing ``out_col`` is replaced in place.
+    Every input column crosses the Arrow boundary, so select the
+    columns the caller needs before the call.
 
-    NULL/empty text counts 0 tokens HERE (both apply paths coalesce).
-    Note the surrogate counters differ: ``token_count`` /
-    ``bpe_token_count`` NULL-propagate (``size(split(NULL))`` is NULL),
-    so budgeting callers mixing the two surfaces must coalesce the
-    surrogate side — as ``test_bpe_apply_rebases_token_budget`` does
-    (r8 review: the old claim of a uniform contract was false).
+    NULL/empty text counts 0 tokens. Note the surrogate counters differ:
+    ``token_count`` / ``bpe_token_count`` NULL-propagate
+    (``size(split(NULL))`` is NULL), so budgeting callers mixing the two
+    surfaces must coalesce the surrogate side — as
+    ``test_bpe_apply_rebases_token_budget`` does.
     """
-    if len(merges) > BPE_EXPR_MAX_MERGES:
-        raise ValueError(
-            f"{len(merges)} merge rules exceeds BPE_EXPR_MAX_MERGES="
-            f"{BPE_EXPR_MAX_MERGES}; use bpe_apply_arrow for large "
-            "merge tables"
-        )
-    r = _bpe_symbolized(text_col)
-    for _rank, a, b, _freq in sorted(merges, key=lambda m: m[0]):
-        r = F.replace(r, F.lit(f" {a} {b} "), F.lit(f" {a}{b} "))
-    n = F.size(F.filter(F.split(F.trim(r), " +"), lambda x: x != ""))
-    return docs.withColumn(
-        out_col, F.coalesce(n, F.lit(0)).cast("long")
-    )
-
-
-def bpe_apply_arrow(
-    docs: DataFrame,
-    merges: list[tuple[int, str, str, int]],
-    text_col: str = "text",
-    out_col: str = "n_bpe_tokens",
-) -> DataFrame:
-    """Arrow-batched variant of :func:`bpe_apply` for production-sized
-    merge tables (30k+ rules): the merge list ships to executors inside
-    the serialized kernel (a few hundred KB — closure broadcast, not a
-    join), and each Arrow batch applies the rules with pandas
-    ``str.replace`` — the same left-to-right non-overlapping semantics
-    as JVM ``replace``, verified equal to the expression path in the
-    unit suite. Still map-only (``mapInPandas`` iterator), still zero
-    shuffles; the cost is one Arrow round-trip instead of a
-    plan-depth-linear codegen tree.
-    """
-    import pandas as pd  # noqa: F401 — executor-side import parity
-
     from pyspark.sql import types as T
 
     rules = [(f" {a} {b} ", f" {a}{b} ")
              for _rank, a, b, _freq in sorted(merges, key=lambda m: m[0])]
-    # replace an existing out_col in place (same contract as
-    # bpe_apply's withColumn) instead of appending a duplicate field,
-    # which mapInPandas would reject (r8 review finding)
+    # replace an existing out_col in place instead of appending a
+    # duplicate field, which mapInPandas would reject
     fields = [
         T.StructField(out_col, T.LongType()) if f.name == out_col else f
         for f in docs.schema
@@ -879,28 +799,23 @@ def bpe_apply_arrow(
     def kernel(batches):
         import re
 
-        # re.ASCII: Java's \s (the expression path's split) is the
-        # ASCII class [ \t\n\x0B\f\r]; Python's default Unicode \s
+        # re.ASCII: Java's \s (bpe_learn_merges' word split) is
+        # the ASCII class [ \t\n\x0B\f\r]; Python's default Unicode \s
         # would also split on U+00A0/U+2028/… and silently diverge on
-        # crawl text (r8 review finding). Counting splits on the ASCII
-        # sentinel space only, matching F.split(trim(r), ' +').
+        # crawl text. Words never share a sentinel space, so no rule can
+        # match across words.
         ws = re.compile(r"\s+", re.ASCII)
+
+        def count_one(t):
+            if not t:
+                return 0
+            s = "".join(" " + " ".join(w) + " " for w in ws.split(t) if w)
+            for pat, rep in rules:
+                s = s.replace(pat, rep)
+            return sum(1 for tok in s.split(" ") if tok)
+
         for pdf in batches:
-            texts = pdf[text_col]
-
-            def count_one(t):
-                if not t:
-                    return 0
-                s = "".join(
-                    " " + " ".join(w) + " "
-                    for w in ws.split(t) if w
-                )
-                for pat, rep in rules:
-                    s = s.replace(pat, rep)
-                return sum(1 for tok in s.split(" ") if tok)
-
-            pdf = pdf.copy()
-            pdf[out_col] = texts.map(count_one).astype("int64")
+            pdf[out_col] = pdf[text_col].map(count_one).astype("int64")
             yield pdf
 
     return docs.mapInPandas(kernel, schema=schema)

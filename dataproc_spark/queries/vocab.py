@@ -486,7 +486,7 @@ FROM toks GROUP BY src
 def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE apply pass (``textstats.bpe_apply``): learn 3 merge rules
     from the corpus (``bpe_learn_merges``), then apply them corpus-wide
-    as a map-only chained-replace expression and report the per-document
+    with the map-only Arrow kernel and report the per-document
     learned-vocabulary token count next to the whitespace surrogate —
     the loop-closer that re-bases token budgeting on real BPE counts
     (``select_under_budget`` / ``pack_greedy`` are weight-column-generic
@@ -496,7 +496,7 @@ def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     merges = textstats.bpe_learn_merges(docs, n_merges=3)
     return (
-        textstats.bpe_apply(docs, merges)
+        textstats.bpe_apply(docs.select("doc_id", "text"), merges)
         .select(
             "doc_id",
             textstats.token_count().cast("long").alias("n_ws_tokens"),

@@ -294,11 +294,14 @@ def _pandas_measure_frame(
     ranked: DataFrame,
     pandas_ms,
     partition_cols: list[str],
-    order_col: str,
+    rank_col: str,
 ) -> DataFrame:
     """Per-group Series-closure measures via Arrow grouped map: each
-    (query[, step]) group's relevance column, sorted by the evaluation
-    order, is handed to the user closure exactly as pandas would."""
+    (query[, step]) group's relevance column, in evaluation order, is
+    handed to the user closure exactly as pandas would. The order is
+    ``rank_col``, the prefix ``row_number`` over ``order_col``, so a
+    struct ``order_col`` sorts as Spark sorts it (field by field, nulls
+    first) and ties resolve as they do for the Column measures."""
     from pyspark.sql.types import DoubleType
 
     fields = {f.name: f.dataType for f in ranked.schema.fields}
@@ -306,19 +309,11 @@ def _pandas_measure_frame(
         [StructField(c, fields[c]) for c in partition_cols]
         + [StructField(m.name, DoubleType()) for _, m in pandas_ms]
     )
-    if isinstance(ranked.schema[order_col].dataType, StructType):
-        raise TypeError(
-            f"Series-closure (pandas) measures need a scalar {order_col!r} "
-            "order column — pandas cannot sort struct values. Either "
-            "materialize an integer rank for the pandas path, or use "
-            "Column measures (which sort struct keys natively)."
-        )
     specs = [(rel_col, m.name, m.fn) for rel_col, m in pandas_ms]
     part_cols = list(partition_cols)
-    order = order_col
 
     def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order)
+        pdf = pdf.sort_values(rank_col)
         row = {c: [pdf[c].iloc[0]] for c in part_cols}
         for rel_col, name, fn in specs:
             row[name] = [float(fn(pdf[rel_col].reset_index(drop=True)))]
@@ -379,6 +374,34 @@ def _augment_for_measures(
     return ranked
 
 
+def _measure_groups(
+    ranked: DataFrame,
+    measures: dict,
+    partition_cols: list[str],
+    order_col: str,
+) -> DataFrame:
+    """Every measure per ``partition_cols`` group of a frame whose
+    ``_prefix_rn`` numbers each group's rows by ``order_col``: Column
+    measures in one aggregate, Series-closure measures in one grouped
+    map, joined on the group keys."""
+    column_ms, pandas_ms = _split_measures(measures)
+    out = None
+    if column_ms:
+        grouped: dict = {}
+        for rc, m in column_ms:
+            grouped.setdefault(rc, []).append(m)
+        aug = _augment_for_measures(ranked, grouped, partition_cols, order_col)
+        out = aug.groupBy(*partition_cols).agg(
+            *_column_measure_cols(column_ms, "_prefix_rn")
+        )
+    if pandas_ms:
+        pframe = _pandas_measure_frame(
+            ranked, pandas_ms, partition_cols, "_prefix_rn"
+        )
+        out = pframe if out is None else out.join(pframe, partition_cols)
+    return out
+
+
 def _measure_input_cols(measures) -> list:
     """Extra input columns declared by the measures themselves (e.g.
     recall_at's total column), for the fail-fast column gates."""
@@ -422,19 +445,7 @@ def evaluate_step(
     hits = results.join(maybe_broadcast(chosen), keys, "leftsemi")
     w = Window.partitionBy("query").orderBy(F.col(order_col).asc())
     ranked = hits.withColumn("_prefix_rn", F.row_number().over(w))
-    column_ms, pandas_ms = _split_measures(measures)
-    out = None
-    if column_ms:
-        grouped: dict = {}
-        for rc, m in column_ms:
-            grouped.setdefault(rc, []).append(m)
-        aug = _augment_for_measures(ranked, grouped, ["query"], order_col)
-        out = aug.groupBy("query").agg(
-            *_column_measure_cols(column_ms, "_prefix_rn")
-        )
-    if pandas_ms:
-        pframe = _pandas_measure_frame(ranked, pandas_ms, ["query"], order_col)
-        out = pframe if out is None else out.join(pframe, ["query"])
+    out = _measure_groups(ranked, measures, ["query"], order_col)
     return out.withColumn("step", F.lit(step).cast("int"))
 
 
@@ -470,9 +481,8 @@ def evaluate(
     Prefer that at scale: materializing an integer ``global_rank`` via
     ``row_number`` over ``Window.partitionBy("query")`` caps that window's
     parallelism at the query count, while the struct key costs nothing —
-    the per-(query, step) prefix windows here sort it natively. (Exception:
-    Series-closure pandas measures need a scalar order key; the pandas
-    path raises a TypeError on struct keys.)
+    the per-(query, step) prefix windows here sort it natively, and
+    Series-closure measures see their rows in that same window order.
     """
     keys = ["query", "shard"] + (["bucket"] if num_buckets is not None else [])
     num_steps = num_shards if num_buckets is None else num_shards * num_buckets
@@ -506,19 +516,5 @@ def evaluate(
     )
     w = Window.partitionBy("query", "step").orderBy(F.col(order_col).asc())
     ranked = exploded.withColumn("_prefix_rn", F.row_number().over(w))
-    column_ms, pandas_ms = _split_measures(measures)
-    out = None
-    if column_ms:
-        grouped: dict = {}
-        for rc, m in column_ms:
-            grouped.setdefault(rc, []).append(m)
-        aug = _augment_for_measures(ranked, grouped, ["query", "step"], order_col)
-        out = aug.groupBy("query", "step").agg(
-            *_column_measure_cols(column_ms, "_prefix_rn")
-        )
-    if pandas_ms:
-        pframe = _pandas_measure_frame(
-            ranked, pandas_ms, ["query", "step"], order_col
-        )
-        out = pframe if out is None else out.join(pframe, ["query", "step"])
+    out = _measure_groups(ranked, measures, ["query", "step"], order_col)
     return out.orderBy("query", "step")

@@ -1105,14 +1105,46 @@ def test_domain_mixture_integer_shares(spark):
 
 
 # ---------------------------------------------------------------------------
-# BPE apply pass (textstats.bpe_apply / bpe_apply_arrow)
+# BPE apply pass (textstats.bpe_apply)
 # ---------------------------------------------------------------------------
 
 
-def test_bpe_apply_counts_and_arrow_parity(spark):
-    """The chained-replace expression path and the Arrow kernel must
-    produce identical learned-token counts; counts with 0 merges equal
-    the character-symbol count; every merge round only shrinks counts."""
+def _bpe_model_count(text, merges):
+    """Plain-Python BPE apply over words: words split on Java's ASCII
+    \\s class, one symbol per character, then for each rule in rank order
+    merge adjacent ``(a, b)`` pairs left to right without overlap. A
+    merge's right neighbour never starts the next merge — in the
+    trainer's sentinel-space string the two matches would share a space
+    (``bpe_learn_merges``' documented adjacent-repeat divergence)."""
+    import re
+
+    if not text:
+        return 0
+    total = 0
+    for w in re.split(r"[ \t\n\x0b\f\r]+", text):
+        if not w:
+            continue
+        syms = list(w)
+        for _rank, a, b, _freq in sorted(merges):
+            out, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and (syms[i], syms[i + 1]) == (a, b):
+                    out.append(a + b)
+                    out.extend(syms[i + 2:i + 3])
+                    i += 3
+                else:
+                    out.append(syms[i])
+                    i += 1
+            syms = out
+        total += len(syms)
+    return total
+
+
+def test_bpe_apply_matches_python_model(spark):
+    """Learned-token counts equal the plain-Python word model; counts
+    with 0 merges equal the character-symbol count; every merge round
+    only shrinks counts; a 1,000-rule table (plan depth no longer grows
+    with the rule count) runs and matches the model."""
     df = spark.createDataFrame(
         [(1, "low low lower"), (2, "low"), (3, ""), (4, None)],
         schema="doc_id long, text string",
@@ -1126,43 +1158,63 @@ def test_bpe_apply_counts_and_arrow_parity(spark):
     # no merges -> one symbol per character (whitespace excluded)
     assert zero == {1: 11, 2: 3, 3: 0, 4: 0}
 
-    expr = {r.doc_id: r.n_bpe_tokens
-            for r in textstats.bpe_apply(df, merges).collect()}
-    arrow = {r.doc_id: r.n_bpe_tokens
-             for r in textstats.bpe_apply_arrow(df, merges).collect()}
-    assert expr == arrow
-    assert all(expr[d] <= zero[d] for d in expr)
+    got = {r.doc_id: r.n_bpe_tokens
+           for r in textstats.bpe_apply(df, merges).collect()}
+    assert all(got[d] <= zero[d] for d in got)
     # merges: (l,o) then (lo,w) -> 'low' is ONE token, 'lower' is lo w e r
     # after rank0 -> low e r after rank1: 1 + 2 = 3 symbols
-    assert expr == {1: 1 + 1 + 3, 2: 1, 3: 0, 4: 0}
+    assert got == {1: 1 + 1 + 3, 2: 1, 3: 0, 4: 0}
+    texts = dict(df.collect())
+    assert got == {d: _bpe_model_count(t, merges) for d, t in texts.items()}
 
-    with pytest.raises(ValueError, match="BPE_EXPR_MAX_MERGES"):
-        textstats.bpe_apply(df, [(i, "x", "y", 1) for i in range(1000)])
+    # 1,000 rules over a 4-letter alphabet: each rule merges two symbols
+    # already in the pool, so long merge chains really fire; passed in
+    # shuffled order to exercise the rank sort
+    import random
+
+    rng = random.Random(7)
+    pool, big = list("abcd"), []
+    for rank in range(1000):
+        a, b = rng.choice(pool), rng.choice(pool[:8] + pool[-8:])
+        big.append((rank, a, b, 1))
+        if len(a + b) <= 12:
+            pool.append(a + b)
+    rng.shuffle(big)
+    words = [
+        "".join(rng.choice("abcd") for _ in range(rng.randint(1, 30)))
+        for _ in range(300)
+    ]
+    corpus = [
+        (i, " ".join(words[j] for j in rng.sample(range(300), 12)))
+        for i in range(40)
+    ] + [(40, "abab abab\taaaa"), (41, None)]
+    cdf = spark.createDataFrame(corpus, schema="doc_id long, text string")
+    got = {r.doc_id: r.n_bpe_tokens
+           for r in textstats.bpe_apply(cdf, big).collect()}
+    want = {d: _bpe_model_count(t, big) for d, t in corpus}
+    assert got == want
+    zero_big = {d: _bpe_model_count(t, []) for d, t in corpus}
+    assert sum(want.values()) < sum(zero_big.values())  # rules fired
 
 
 def test_bpe_arrow_parity_on_unicode_whitespace_and_replacement(spark):
-    """Two r8 review findings: (1) the Arrow kernel must split with
-    Java's ASCII \\s semantics — U+00A0 is NOT a word boundary, so
-    'a\\u00a0b' is ONE 3-char word on both paths; (2) both paths must
-    REPLACE a pre-existing out_col, not crash on a duplicate field."""
+    """The Arrow kernel splits with Java's ASCII \\s semantics — U+00A0 is
+    NOT a word boundary, so 'a\\u00a0b' is ONE 3-char word — and it
+    REPLACES a pre-existing out_col instead of crashing on a duplicate
+    field."""
     df = spark.createDataFrame(
         [(1, "a\u00a0b"), (2, "a b"), (3, "x\u2028y z")],
         schema="doc_id long, text string",
     )
-    expr = {r.doc_id: r.n_bpe_tokens
-            for r in textstats.bpe_apply(df, []).collect()}
-    arrow = {r.doc_id: r.n_bpe_tokens
-             for r in textstats.bpe_apply_arrow(df, []).collect()}
-    assert expr == arrow == {1: 3, 2: 2, 3: 4}
+    got = {r.doc_id: r.n_bpe_tokens
+           for r in textstats.bpe_apply(df, []).collect()}
+    assert got == {1: 3, 2: 2, 3: 4}
 
     # re-running the pass over a frame that already carries the column
     stale = df.withColumn("n_bpe_tokens", F.lit(-1).cast("long"))
-    re_expr = textstats.bpe_apply(stale, [])
-    re_arrow = textstats.bpe_apply_arrow(stale, [])
-    assert re_expr.columns == re_arrow.columns == stale.columns
-    assert ({r.doc_id: r.n_bpe_tokens for r in re_arrow.collect()}
-            == {r.doc_id: r.n_bpe_tokens for r in re_expr.collect()}
-            == expr)
+    rerun = textstats.bpe_apply(stale, [])
+    assert rerun.columns == stale.columns
+    assert {r.doc_id: r.n_bpe_tokens for r in rerun.collect()} == got
 
 
 def test_bpe_apply_counts_bounded_by_surrogates(spark):
@@ -2634,62 +2686,35 @@ def test_jpeg_progressive_codec():
     assert (px[:, :, 0] == flat).all()
 
 
-def test_jpeg_c_codec_seam():
-    """decode_jpeg_fast: flag off (default) → pure path, byte-for-byte
-    the pure decoder's output; flag on without PIL → documented
-    fallback to the pure path; with PIL present → must agree exactly
-    on the bit-exact gate-class fixtures."""
+def test_jpeg_decode_accept_surface():
+    """decode_jpeg's accept surface: 2x2 chroma sampling decodes on the
+    baseline and the progressive path; a 3x3 sampling factor and a
+    stream with no SOF raise ValueError, so a payload outside the
+    surface quarantines instead of decoding."""
     import numpy as np
-
-    from dataproc_spark.extensions.jpeg import (
-        _pil_image,
-        decode_jpeg,
-        decode_jpeg_fast,
-        encode_jpeg,
-    )
-
-    blocks = np.kron(
-        np.array([[7, 200]]), np.ones((8, 8), dtype=int)
-    ).astype(np.uint8)
-    payload = encode_jpeg(blocks, quant=1)
-    pure = decode_jpeg(payload)
-    off = decode_jpeg_fast(payload, use_c_codec=False)
-    assert (pure[3] == off[3]).all() and pure[:3] == off[:3]
-    # flag on: PIL if importable, silent pure fallback otherwise —
-    # either way the bit-exact fixture must reproduce exactly
-    on = decode_jpeg_fast(payload, use_c_codec=True)
-    assert (pure[3] == on[3]).all() and pure[:3] == on[:3]
-    # accept-surface parity (no PIL needed): the pre-check the PIL arm
-    # runs must reject exactly what the pure decoder rejects, so corpus
-    # membership can never depend on which machine ran the job
     import pytest as _pytest
 
-    from dataproc_spark.extensions.jpeg import _check_pure_supported
+    from dataproc_spark.extensions.jpeg import decode_jpeg, encode_jpeg
 
-    _check_pure_supported(payload)  # baseline fixture: accepted
-    _check_pure_supported(
-        encode_jpeg(blocks, quant=1, progressive=True)
-    )  # SOF2: accepted (the pure decoder handles it since r10)
-    subsampled = bytearray(encode_jpeg(blocks, quant=1))
-    sof = bytes(subsampled).find(b"\xFF\xC0")
-    # r10b: factors 1-2 are now DECODED on the baseline path, so 2x2
-    # passes the pre-check; 3x3 is outside the surface and must raise
-    subsampled[sof + 11] = 0x22
-    _check_pure_supported(bytes(subsampled))
-    subsampled[sof + 11] = 0x33
-    with _pytest.raises(ValueError, match="sampling factor"):
-        _check_pure_supported(bytes(subsampled))
-    # r11: progressive + subsampling is now INSIDE the surface too
-    subsampled[sof + 1] = 0xC2
-    subsampled[sof + 11] = 0x22
-    _check_pure_supported(bytes(subsampled))
-    subsampled[sof + 11] = 0x33
-    with _pytest.raises(ValueError, match="sampling factor"):
-        _check_pure_supported(bytes(subsampled))
+    img = np.kron(
+        np.array([[[7, 90, 200], [200, 30, 60]],
+                  [[50, 50, 50], [255, 0, 128]]]),
+        np.ones((16, 16, 1), dtype=int),
+    ).astype(np.uint8)
+    full = decode_jpeg(encode_jpeg(img, quant=1))
+    for prog in (False, True):
+        pay = bytearray(encode_jpeg(img, quant=1, subsampling="420",
+                                    progressive=prog))
+        sof = bytes(pay).find(b"\xFF\xC2" if prog else b"\xFF\xC0")
+        assert pay[sof + 11] == 0x22  # luma 2x2: 4:2:0
+        w, h, c, px = decode_jpeg(bytes(pay))
+        # MCU-aligned constant color regions survive 4:2:0 exactly
+        assert (w, h, c) == full[:3] and (px == full[3]).all()
+        pay[sof + 11] = 0x33
+        with _pytest.raises(ValueError, match="sampling factor"):
+            decode_jpeg(bytes(pay))
     with _pytest.raises(ValueError, match="SOF"):
-        _check_pure_supported(b"\xFF\xD8\xFF\xD9")
-    if _pil_image() is None:
-        _pytest.skip("PIL not installed — C-codec equality arm skipped")
+        decode_jpeg(b"\xFF\xD8\xFF\xD9")
 
 
 def test_cut_token_spans(spark):
@@ -2954,17 +2979,12 @@ def test_jpeg_progressive_decoder_only_paths():
 def test_jpeg_restart_markers():
     """r10b baseline restart intervals: DRI + RSTn roundtrip equals the
     restart-free encoding across shapes/quants (incl. >8 restarts — the
-    modulo-8 sequence wrap), out-of-sequence markers are loud, the
-    C-codec pre-check accepts baseline DRI but still refuses
-    progressive DRI, and progressive encoding refuses the param."""
+    modulo-8 sequence wrap), out-of-sequence markers are loud, and
+    progressive encoding refuses the param."""
     import numpy as np
     import pytest as _pytest
 
-    from dataproc_spark.extensions.jpeg import (
-        _check_pure_supported,
-        decode_jpeg,
-        encode_jpeg,
-    )
+    from dataproc_spark.extensions.jpeg import decode_jpeg, encode_jpeg
 
     rng = np.random.RandomState(11)
     for _ in range(6):
@@ -2985,7 +3005,6 @@ def test_jpeg_restart_markers():
     pay = encode_jpeg(big, quant=2, restart_interval=2)  # 11 RSTs: wraps
     b = decode_jpeg(pay)
     assert (a[3] == b[3]).all()
-    _check_pure_supported(pay)  # baseline DRI passes the seam pre-check
     bad = bytearray(pay)
     i = bytes(bad).find(b"\xFF\xD0")
     bad[i + 1] = 0xD5
@@ -2995,7 +3014,6 @@ def test_jpeg_restart_markers():
     pp = encode_jpeg(big, quant=2, progressive=True, restart_interval=2)
     assert b"\xFF\xDD" in pp and b"\xFF\xD0" in pp
     assert (decode_jpeg(pp)[3] == a[3]).all()
-    _check_pure_supported(pp)  # …and pass the seam pre-check
     badp = bytearray(pp)
     j = bytes(badp).find(b"\xFF\xD0")
     badp[j + 1] = 0xD4
@@ -3088,13 +3106,12 @@ def test_jpeg_progressive_restart_subsampling():
     on the PROGRESSIVE (SOF2) path. The quantized coefficients are
     scan-script-independent by construction, so (a) progressive ==
     baseline pixels at equal subsampling, (b) restart markers never
-    change pixels, (c) successive approximation composes with both,
-    and (d) the seam pre-check accepts what the pure decoder accepts."""
+    change pixels, and (c) successive approximation composes with
+    both."""
     import numpy as np
     import pytest as _pytest
 
     from dataproc_spark.extensions.jpeg import (
-        _check_pure_supported,
         decode_jpeg,
         encode_jpeg,
         parse_jpeg_meta,
@@ -3114,7 +3131,6 @@ def test_jpeg_progressive_restart_subsampling():
                 successive=succ, restart_interval=ri,
             )
             assert (decode_jpeg(pay)[3] == ref).all(), (h, w, q, ri, sub)
-            _check_pure_supported(pay)
             meta = parse_jpeg_meta(pay)
             assert meta["width"] == w and meta["height"] == h
     # odd dims force the MCU-padded-vs-true-grid asymmetry: the AC scans
@@ -3412,37 +3428,6 @@ def test_charset_advice_fixes():
     assert sniff_meta_charset(
         b'<meta http-equiv=content-type content="charset=gbk">'
     ) == "gbk"
-
-
-def test_jpeg_seam_subsampled_routes_pure():
-    """r11 review regression: chroma upsampling is decoder-defined
-    (libjpeg interpolates, the pure path replicates), so subsampled
-    streams must decode on the PURE path even with the C-codec flag on
-    — pixel statistics may not depend on which machine ran the job.
-    4:4:4 streams with restarts stay eligible for the C path."""
-    import numpy as np
-
-    from dataproc_spark.extensions.jpeg import (
-        _is_subsampled,
-        decode_jpeg,
-        decode_jpeg_fast,
-        encode_jpeg,
-    )
-
-    rng = np.random.RandomState(5)
-    img = rng.randint(0, 256, (24, 40, 3)).astype(np.uint8)
-    for sub in ("420", "422"):
-        for prog in (False, True):
-            pay = encode_jpeg(img, quant=1, subsampling=sub,
-                              progressive=prog)
-            assert _is_subsampled(pay)
-            pure = decode_jpeg(pay)
-            fast = decode_jpeg_fast(pay, use_c_codec=True)
-            assert (pure[3] == fast[3]).all() and pure[:3] == fast[:3]
-    flat = encode_jpeg(img, quant=1)  # 4:4:4
-    assert not _is_subsampled(flat)
-    gray = encode_jpeg(img[:, :, 0], quant=1, restart_interval=2)
-    assert not _is_subsampled(gray)
 
 
 def test_chained_content_codings():
@@ -6190,24 +6175,35 @@ def test_token_drift_known_values(spark):
         corpus.token_drift(a, empty).collect()
 
 
-def test_kmeans_assign_arrow_parity(spark, monkeypatch):
-    """r15: the Arrow matmul assignment (large-k path behind
-    _KMEANS_ARROW_THRESHOLD) is bit-identical to the literal
-    expression plan — same clusters, same schema, same tie-breaks
-    (duplicate seed vectors tie every point between cid 0 and 1;
-    both paths must pick 0)."""
+def test_kmeans_assign_arrow_parity(spark):
+    """The Arrow matmul assignment picks exactly the brute-force Python
+    argmin of squared L2 distance with ties to the smallest cid —
+    duplicate centroids and exact midpoints included — and keeps
+    ``cluster`` INT; embed_kmeans on duplicate seed vectors sends every
+    tied point to cid 0."""
+    from pyspark.sql.types import IntegerType
+
     from dataproc_spark.extensions import simsearch
 
-    rows = [(i, [float((i * 7) % 13), float((i * 3) % 11)])
+    rows = [(i, [(i * 7) % 13 - 6, (i * 3) % 11 - 5, i % 4])
             for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    base = simsearch.embed_kmeans(df, k=4, iters=2)
-    base_rows = sorted((r.vec_id, r.cluster) for r in base.collect())
-    monkeypatch.setattr(simsearch, "_KMEANS_ARROW_THRESHOLD", 0)
-    arrow = simsearch.embed_kmeans(df, k=4, iters=2)
-    assert arrow.schema == base.schema
-    assert sorted((r.vec_id, r.cluster) for r in arrow.collect()) \
-        == base_rows
+    q = spark.createDataFrame(rows, "vec_id long, _v array<bigint>")
+    # cids 2 and 5 are the same point; (0,0,0) sits midway between 0/1
+    centroids = [(0, [-2, 0, 0]), (1, [2, 0, 0]), (2, [4, 4, 1]),
+                 (5, [4, 4, 1]), (9, [-5, -4, 3])]
+
+    def brute(v):
+        d = {cid: sum((x - y) ** 2 for x, y in zip(v, c))
+             for cid, c in centroids}
+        return min(d, key=lambda cid: (d[cid], cid))
+
+    out = simsearch._kmeans_assign(q, centroids)
+    assert out.schema["cluster"].dataType == IntegerType()
+    got = {r.vec_id: r.cluster for r in out.collect()}
+    assert got == {i: brute(v) for i, v in rows}
+    mid = spark.createDataFrame([(0, [0, 0, 0])], "vec_id long, _v array<bigint>")
+    assert simsearch._kmeans_assign(mid, centroids).first().cluster == 0
+    assert 5 not in got.values()  # the duplicate of cid 2 never wins
     # the tie fixture from test_embed_kmeans_drops_empty_clusters
     tie = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [0.0, 0.0]), (2, [1.0, 0.0]),
@@ -6429,10 +6425,12 @@ def test_pq_train_fused_update_parity(spark):
 
 
 def test_group_update_partials_matches_jvm_aggregate(spark):
-    """r15 opt round 2: the kernel-partials centroid recompute
-    (_group_update_partials) returns the same (count, per-dim sums)
-    as the wide JVM aggregate it replaced — negative components and a
-    key with a single row included."""
+    """The kernel-partials centroid recompute (_group_update_partials)
+    returns the exact per-key (count, per-dim int sums) of a numpy
+    model — what a JVM ``count``/``sum`` aggregate gives — across six
+    partitions, with negative components and a single-row key."""
+    import numpy as np
+
     from dataproc_spark.extensions import simsearch
 
     rows = [
@@ -6445,13 +6443,14 @@ def test_group_update_partials_matches_jvm_aggregate(spark):
     comb = simsearch._group_update_partials(
         df.select("cluster", "_v"), "cluster", "_v"
     )
-    agg = simsearch._mean_update_rows(
-        df.select("cluster", "_v"), ["cluster"], "_v", 5
-    )
+    keys = np.array([r[1] for r in rows])
+    vecs = np.array([r[2] for r in rows], dtype=np.int64)
     expect = {
-        int(r["cluster"]): (int(r["_n"]), [int(r[f"_s{i}"]) for i in range(5)])
-        for r in agg
+        int(k): (int((keys == k).sum()),
+                 [int(x) for x in vecs[keys == k].sum(axis=0)])
+        for k in np.unique(keys)
     }
+    assert expect[7][0] == 1
     assert {k: (n, [int(x) for x in s]) for k, (n, s) in comb.items()} \
         == expect
 

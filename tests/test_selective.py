@@ -297,19 +297,38 @@ def test_struct_order_key_matches_integer_rank(eval_inputs):
     assert got == want
 
 
-def test_struct_order_key_rejected_for_pandas_measures(eval_inputs):
-    """Series-closure measures sort inside pandas, which cannot order
-    struct values — the guard must fail fast with a clear message."""
-    shards, results = eval_inputs
+def test_struct_order_key_for_pandas_measures(eval_inputs):
+    """Series-closure measures see each group in Spark's ascending order
+    of a struct order_col — field by field, a NULL field first — so a
+    P@2 closure equals precision_at(2) under a key whose first field
+    ties and whose fields hold NULLs."""
+    shards, _ = eval_inputs
+    rows = [
+        # query, shard, k1, k2, relevant
+        (0, 0, None, 9, 0),
+        (0, 0, 1, 2, 1),
+        (0, 1, 1, 1, 0),  # ties (1, 2) on k1; k2 puts it first
+        (0, 1, 2, 0, 1),
+        (1, 1, 3, None, 1),  # NULL k2 sorts before (3, 0)
+        (1, 1, 3, 0, 0),
+        (1, 0, 0, 7, 1),
+        (1, 0, 5, 5, 1),
+    ]
+    results = shards.sparkSession.createDataFrame(
+        rows, "query long, shard long, k1 long, k2 long, relevant int"
+    ).select("query", "shard", F.struct("k1", "k2").alias("gkey"),
+             "relevant")
 
     def p_at_2(s):
         return s[:2].sum() / s[:2].count()
 
-    keyed = results.withColumn(
-        "gkey", F.struct(F.col("global_rank").alias("r"))
-    ).drop("global_rank")
-    with pytest.raises(TypeError, match="scalar"):
-        evaluate(
-            shards, keyed, {"relevant": [p_at_2]}, num_shards=2,
-            order_col="gkey",
-        ).collect()
+    measures = {"relevant": [precision_at(2), p_at_2]}
+    out = evaluate(shards, results, measures, num_shards=2, order_col="gkey")
+    got = {(r.query, r.step): (r.p_2, r.p_at_2) for r in out.collect()}
+    # NULLs sorted last, or the k1 tie broken the other way, would
+    # give 0.5 at (0, 2) and at (1, 2)
+    want = {(0, 1): 0.5, (0, 2): 0.0, (1, 1): 0.5, (1, 2): 1.0}
+    assert got == {k: (v, v) for k, v in want.items()}
+    one = evaluate_step(shards, results, measures, step=2, order_col="gkey")
+    assert {r.query: (r.p_2, r.p_at_2) for r in one.collect()} == {
+        0: (0.0, 0.0), 1: (1.0, 1.0)}
