@@ -1,16 +1,16 @@
-"""IR effectiveness measures as Spark Column factories.
+"""IR effectiveness measures as closures over an ordered relevance Series.
 
 Parity: reference ``measures.py:3-5`` defines ``precision_at(k)`` as a
-closure over an *implicitly ordered* pandas Series (``s[:k]`` takes the
-first k rows positionally). Spark has no row order, so a measure here is a
-factory producing an aggregate Column over an **explicit** per-query prefix
-rank (``row_number`` over the result ordering — SURVEY.md §2.2
-"ordered-prefix aggregate").
+closure over a pandas Series in result order (``s[:k]`` takes the first
+k rows positionally). A measure here keeps that contract:
+:func:`dataproc_spark.selective.evaluate` sorts each query's results by
+its explicit order key once, and at every selection depth calls the
+closure on that depth's prefix — the relevance values as a Series with a
+RangeIndex, in evaluation order.
 
 The public shape mirrors the reference's ``measures`` dict:
-``{relevance_column: [measure, ...]}`` — but values are :class:`Measure`
-objects instead of Series closures, so they run JVM-side inside whole-stage
-codegen instead of per-group Python.
+``{relevance_column: [measure, ...]}``; a value is a :class:`Measure` or
+a plain callable, which :func:`as_measure` wraps.
 """
 
 from __future__ import annotations
@@ -18,65 +18,52 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+import numpy as np
 
 
 @dataclass(frozen=True)
 class Measure:
-    """A named aggregate over the ordered prefix of a result list.
+    """A named scalar over the ordered prefix of a result list.
 
-    ``builder(rel_col, rank_col)`` returns an aggregate Column; ``rank_col``
-    is the 1-based position of the row in the per-(query, step) result
-    ordering. ``requires`` names auxiliary window columns the evaluation
-    driver must materialize first (``_hits``: running relevant count in
-    prefix order; ``_ideal_rn``: rank by relevance descending).
-    """
-
-    name: str
-    builder: Callable[[str, str], Column]
-    requires: tuple = ()
-    #: extra INPUT columns the results frame must already carry (e.g.
-    #: recall_at's per-query total column) — validated by the evaluate
-    #: gates up front, so a missing denominator fails with the module's
-    #: uniform 'Column X missing' error instead of a raw Catalyst
-    #: UNRESOLVED_COLUMN deep in the aggregate
-    input_cols: tuple = ()
-
-    def column(self, rel_col: str, rank_col: str) -> Column:
-        return self.builder(rel_col, rank_col).alias(self.name)
-
-
-@dataclass(frozen=True)
-class PandasMeasure:
-    """Escape hatch for measures not expressible as Column aggregates:
-    an arbitrary ``Series → scalar`` closure, exactly the reference's
-    measure contract (``measures.py:3-5`` — e.g. a custom MAP or a
-    judgment-weighted metric).
-
-    Runs via Arrow-batched ``applyInPandas`` per (query[, step]) group
-    with rows pre-sorted by the evaluation order — the closure sees the
-    same ordered relevance Series the reference's pandas version saw.
-    Column measures stay JVM-side; only groups' relevance vectors cross
-    to Python, and only when a PandasMeasure is present.
+    ``fn(rel, *inputs)`` receives the prefix's relevance as a
+    ``pd.Series`` (RangeIndex, evaluation order, NULL as NaN) plus one
+    Series per ``input_cols`` entry, aligned with ``rel``. ``type`` is the
+    Spark SQL type of the output column.
     """
 
     name: str
     fn: Callable
+    #: extra INPUT columns the results frame must already carry (e.g.
+    #: recall_at's per-query total column) — validated by the evaluate
+    #: gates up front, so a missing denominator fails with the module's
+    #: uniform 'Column X missing' error
+    input_cols: tuple = ()
+    type: str = "double"
 
 
-def as_measure(obj, rel_hint: str = "measure") -> "Measure | PandasMeasure":
-    """Coerce a measure spec: Measure/PandasMeasure pass through; a plain
-    callable (the reference's closure style) wraps into a PandasMeasure
-    named after the function."""
-    if isinstance(obj, (Measure, PandasMeasure)):
+def as_measure(obj, rel_hint: str = "measure") -> Measure:
+    """Coerce a measure spec: a Measure passes through; a plain callable
+    (the reference's closure style) wraps into a Measure named after the
+    function."""
+    if isinstance(obj, Measure):
         return obj
     if callable(obj):
         name = getattr(obj, "__name__", rel_hint)
         if name == "<lambda>":
             name = rel_hint
-        return PandasMeasure(name, obj)
+        return Measure(name, obj)
     raise TypeError(f"not a measure: {obj!r}")
+
+
+def _hits(rel) -> np.ndarray:
+    """Binarized relevance: a row is relevant iff ``rel > 0`` (NULL is
+    not). Precision and recall count documents, so a graded judgment
+    (rel=2) must not count double (r8 review finding)."""
+    return rel.to_numpy(dtype=float, na_value=np.nan) > 0
+
+
+def _discounts(n: int) -> np.ndarray:
+    return 1.0 / np.log2(np.arange(2, n + 2))
 
 
 def precision_at(k: int, name: str | None = None) -> Measure:
@@ -85,12 +72,14 @@ def precision_at(k: int, name: str | None = None) -> Measure:
     Matches reference ``measures.py:5`` (``s[:k].sum() / s[:k].count()``):
     the denominator is the number of *present* rows in the prefix, so a
     query with fewer than k results divides by its result count, and
-    null relevances are excluded — ``avg`` reproduces both behaviors.
+    null relevances are skipped; all-NULL gives NULL.
     """
-    return Measure(
-        name or f"p_{k}",
-        lambda rel, rn: F.avg(F.when(F.col(rn) <= k, F.col(rel))),
-    )
+    def p(rel):
+        top = rel[:k]
+        n = top.count()
+        return top.sum() / n if n else None
+
+    return Measure(name or f"p_{k}", p)
 
 
 def recall_at(k: int, total_col: str = "num_rel", name: str | None = None) -> Measure:
@@ -98,98 +87,62 @@ def recall_at(k: int, total_col: str = "num_rel", name: str | None = None) -> Me
 
     Extension beyond the reference (its measure set has only P@k);
     ``total_col`` must hold the per-query total relevant count on each row.
-    Relevance is binarized (a row is relevant iff ``rel > 0``): recall
-    counts documents, so a graded judgment must not count double (r8
-    review finding — the old graded sum could report recall > 1).
+    Relevance is binarized, so graded recall cannot exceed 1.
     Zero-relevant queries score 0.0 instead of NULL.
     """
-    return Measure(
-        name or f"r_{k}",
-        lambda rel, rn: F.when(
-            F.max(F.col(total_col)) > 0,
-            F.sum(
-                F.when(
-                    (F.col(rn) <= k) & (F.col(rel) > 0), F.lit(1)
-                ).otherwise(F.lit(0))
-            )
-            / F.max(F.col(total_col)),
-        ).otherwise(F.lit(0.0)),
-        input_cols=(total_col,),
-    )
+    def r(rel, total):
+        t = total.max()
+        return _hits(rel[:k]).sum() / t if t > 0 else 0.0
+
+    return Measure(name or f"r_{k}", r, input_cols=(total_col,))
 
 
 def num_retrieved(name: str = "num_ret") -> Measure:
     """Count of retrieved results per (query, step)."""
-    return Measure(name, lambda rel, rn: F.count(F.lit(1)))
+    return Measure(name, len, type="long")
 
 
 def average_precision(k: int | None = None, name: str | None = None) -> Measure:
     """AP@k — mean over relevant ranks of precision-at-that-rank.
 
-    Needs the running relevant-count at each rank, which is itself a
-    window quantity:
-    AP = Σ_{r ≤ k : rel_r > 0} (hits_up_to_r / r) / total_rel, where
-    total_rel counts every relevant doc in the result set — never
-    prefix-limited (trec_eval semantics). The running hits
-    column must be provided by the caller as ``_hits`` when using this
-    measure via :func:`dataproc_spark.selective.evaluate` (evaluate adds
-    it automatically when any AP/nDCG measure is present).
+    AP = Σ_{r ≤ k : rel_r > 0} (hits_up_to_r / r) / total_rel, with
+    binarized hits, where total_rel counts every relevant doc in the
+    prefix — never cut at k (trec_eval semantics): a relevant doc ranked
+    below the cutoff must lower AP@k, not shrink its denominator (r8
+    review finding). 0.0 when nothing relevant falls inside the cutoff
+    or the prefix holds no relevant doc.
     """
-    def build(rel, rn):
-        in_prefix = F.lit(True) if k is None else (F.col(rn) <= k)
-        contrib = F.when(
-            in_prefix & (F.col(rel) > 0),
-            F.col("_hits") / F.col(rn),
-        )
-        # denominator = TOTAL relevant in the result set, never
-        # prefix-limited (trec_eval semantics): a relevant doc ranked
-        # below the cutoff must lower AP@k, not shrink its denominator.
-        # The old prefix-limited graded sum scored a query 1.0 for one
-        # early hit with three relevant docs unretrieved-in-prefix (r8
-        # review finding; the docstring always promised total_rel).
-        denom = F.sum(
-            F.when(F.col(rel) > 0, F.lit(1)).otherwise(F.lit(0))
-        )
-        # coalesce: with relevant docs present but NONE inside the
-        # prefix, contrib is all-NULL and F.sum(contrib) is NULL — AP@k
-        # must be 0.0 there (trec_eval gives 0), not a NULL that a
-        # downstream mean silently skips (r8 follow-up review finding;
-        # recall_at got .otherwise(0) for this same class)
-        ap = F.coalesce(F.sum(contrib), F.lit(0.0)) / denom
-        return F.when(denom > 0, ap).otherwise(F.lit(0.0))
+    def ap(rel):
+        hit = _hits(rel)
+        total = hit.sum()
+        if not total:
+            return 0.0
+        top = hit[:k]
+        prec = np.cumsum(top) / np.arange(1, len(top) + 1)
+        return prec[top].sum() / total
 
     return Measure(
         # `k is not None`, not truthiness: average_precision(0) must not
         # collide with unbounded AP's name
         name or (f"ap_{k}" if k is not None else "ap"),
-        build,
-        requires=("_hits",),
+        ap,
     )
 
 
 def ndcg_at(k: int, name: str | None = None) -> Measure:
     """nDCG@k with binary or graded relevance (log2 discount).
 
-    DCG = Σ_{r ≤ k} rel_r / log2(r + 1); the ideal DCG normalizer uses
-    the caller-provided ``_ideal_rn`` column (rank by relevance desc),
-    added automatically by :func:`dataproc_spark.selective.evaluate`.
+    DCG = Σ_{r ≤ k} rel_r / log2(r + 1), NULL terms skipped; the ideal
+    DCG ranks the prefix by relevance descending with NULL last. 0.0 when
+    the ideal DCG is not positive.
     """
-    def build(rel, rn):
-        # coalesce for the all-outside-prefix case (same NULL-sum class
-        # as average_precision): nDCG@k is 0.0, not NULL
-        dcg = F.coalesce(
-            F.sum(
-                F.when(F.col(rn) <= k, F.col(rel) / F.log2(F.col(rn) + 1))
-            ),
-            F.lit(0.0),
-        )
-        idcg = F.sum(
-            F.when(
-                F.col("_ideal_rn") <= k,
-                F.col(rel) / F.log2(F.col("_ideal_rn") + 1),
-            )
-        )
-        return F.when(idcg > 0, dcg / idcg).otherwise(F.lit(0.0))
+    def ndcg(rel):
+        r = rel.to_numpy(dtype=float, na_value=np.nan)
+        top = r[:k]
+        ideal = -np.sort(-r)[:k]  # descending, NaN (NULL) last
+        idcg = np.nansum(ideal * _discounts(len(ideal)))
+        if not idcg > 0:
+            return 0.0
+        return np.nansum(top * _discounts(len(top))) / idcg
 
-    return Measure(name or f"ndcg_{k}", build, requires=("_ideal_rn",))
-
+    return Measure(name or f"ndcg_{k}", ndcg)

@@ -277,17 +277,21 @@ GROUP BY query, step
 
 def q_evaluate_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Beyond-P@k measures (recall@10, AP@10, nDCG@10) through the full
-    evaluate sweep — oracle coverage for the ``_hits`` / ``_ideal_rn``
-    window machinery (`selective._augment_for_measures`).
+    evaluate sweep — oracle coverage for measures that need the running
+    relevant count and the ideal (relevance-descending) order of each
+    prefix, plus an input column (the per-query total).
 
     These are integer-scaled deterministic variants of
     ``measures.recall_at`` / ``average_precision`` / ``ndcg_at``: every
-    order-dependent float SUM term is rounded to integer micro-units
-    *before* summation (so the sum is exact and independent of reduction
-    order in both engines), and the only floating-point operations left are
-    single final divisions — the same cross-engine exactness strategy as
-    the integer-cents revenue columns.
+    order-dependent float SUM term is rounded (half up, as Spark's
+    ``round``) to integer micro-units *before* summation (so the sum is
+    exact and independent of reduction order in both engines), and the
+    only floating-point operations left are single final divisions — the
+    same cross-engine exactness strategy as the integer-cents revenue
+    columns.
     """
+    import numpy as np
+
     from dataproc_spark.measures import Measure
 
     base = _shared_shard_results(_t(spark, sf_dir, "lineitem"))
@@ -301,53 +305,40 @@ def q_evaluate_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = res.groupBy("query").agg(F.sum("rel").alias("num_rel"))
     res = res.join(totals, "query")
 
-    def prefix_hits(rel, rn):
-        return F.sum(
-            F.when(F.col(rn) <= 10, F.col(rel)).otherwise(F.lit(0))
-        ).cast("long")
+    def micro_sum(num, den):
+        """Σ round(1e6 · num / den) over the positive-relevance terms."""
+        return int(np.floor(1_000_000.0 * num / den + 0.5).astype("int64").sum())
 
-    def r10(rel, rn):
-        total = F.max("num_rel")
-        return F.when(total > 0, prefix_hits(rel, rn) / total).otherwise(
-            F.lit(0.0)
-        )
+    def r10(rel, total):
+        t = total.max()
+        return int(rel[:10].sum()) / t if t > 0 else 0.0
 
-    def ap10(rel, rn):
-        num = F.sum(
-            F.when(
-                (F.col(rn) <= 10) & (F.col(rel) > 0),
-                F.round(F.lit(1_000_000.0) * F.col("_hits") / F.col(rn)).cast(
-                    "long"
-                ),
-            ).otherwise(F.lit(0).cast("long"))
-        )
+    def ap10(rel, total):
+        top = rel.to_numpy()[:10]
+        pos = np.arange(1, len(top) + 1)
+        hits = np.cumsum(top > 0)
         # TOTAL relevant for the query, never prefix-limited — the same
         # trec_eval denominator measures.average_precision uses after
         # its r8 fix; the gate previously pinned the prefix-limited
         # variant and so could not catch a regression of that exact bug
-        den = F.max("num_rel")
-        return F.when(den > 0, num / den).otherwise(F.lit(0.0))
+        t = total.max()
+        return micro_sum(hits[top > 0], pos[top > 0]) / t if t > 0 else 0.0
 
-    def _dcg_micro(rel, pos_col):
-        return F.sum(
-            F.when(
-                (F.col(pos_col) <= 10) & (F.col(rel) > 0),
-                F.round(
-                    F.lit(1_000_000.0) * F.col(rel) / F.log2(F.col(pos_col) + 1)
-                ).cast("long"),
-            ).otherwise(F.lit(0).cast("long"))
-        )
+    def dcg_micro(rel):
+        top = rel[:10]
+        pos = np.arange(1, len(top) + 1)
+        return micro_sum(top[top > 0], np.log2(pos[top > 0] + 1))
 
-    def ndcg10(rel, rn):
-        dcg = _dcg_micro(rel, rn)
-        idcg = _dcg_micro(rel, "_ideal_rn")
-        return F.when(idcg > 0, dcg / idcg).otherwise(F.lit(0.0))
+    def ndcg10(rel):
+        r = rel.to_numpy()
+        idcg = dcg_micro(-np.sort(-r))
+        return dcg_micro(r) / idcg if idcg > 0 else 0.0
 
     measures = {
         "rel": [
-            Measure("r_10", r10),
-            Measure("ap_10", ap10, requires=("_hits",)),
-            Measure("ndcg_10", ndcg10, requires=("_ideal_rn",)),
+            Measure("r_10", r10, input_cols=("num_rel",)),
+            Measure("ap_10", ap10, input_cols=("num_rel",)),
+            Measure("ndcg_10", ndcg10),
         ]
     }
     return evaluate(_ranked_selection_from(base), res, measures, num_shards=5)

@@ -2,9 +2,10 @@
 decay, greedy bucket-budget resolution, and the evaluation sweep.
 
 Parity: reference ``selectivesearch.py`` (see SURVEY.md §2.1 F4-F13).
-Everything is a pure, lazy DataFrame composition; the only Python that runs
-on executors is the Arrow-batched greedy resolver (F12), which is
-inherently sequential per query.
+Everything is a pure, lazy DataFrame composition. Python runs on executors
+in two Arrow-batched grouped maps over queries, each a walk that is
+inherently sequential per query: the greedy bucket resolver (F12) and the
+evaluation sweep (F4/F5), which calls the measure closures.
 
 Order semantics: the reference leans on implicit pandas row order; here
 every ordering is an explicit column. Ties in ranking break by
@@ -18,16 +19,16 @@ import math
 from typing import Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import IntegralType, StructField, StructType
 
 from dataproc_spark.core import (
     ensure_has_columns,
     local_frame,
     maybe_broadcast,
 )
-from dataproc_spark.measures import Measure, PandasMeasure, as_measure
+from dataproc_spark.measures import as_measure
 
 
 # ---------------------------------------------------------------------------
@@ -264,153 +265,113 @@ def select_buckets(
 # F4/F5 — evaluate_step / evaluate
 # ---------------------------------------------------------------------------
 
-def _split_measures(measures: dict):
-    """Normalize the measures dict and split Column measures from
-    Series-closure (PandasMeasure) measures. Plain callables — the
-    reference's measure style — are auto-wrapped as PandasMeasures."""
-    column_ms: list[tuple[str, Measure]] = []
-    pandas_ms: list[tuple[str, PandasMeasure]] = []
+def _measure_specs(measures: dict) -> list:
+    """Normalize the measures dict into ``(rel_col, Measure)`` pairs in
+    dict order. Plain callables — the reference's measure style — are
+    wrapped by :func:`~dataproc_spark.measures.as_measure`."""
+    specs = []
     for rel_col, ms in measures.items():
         ms = ms if isinstance(ms, (list, tuple)) else [ms]
-        for i, m in enumerate(ms):
-            m = as_measure(m, rel_hint=f"{rel_col}_m{i}")
-            if isinstance(m, Measure):
-                column_ms.append((rel_col, m))
-            else:
-                pandas_ms.append((rel_col, m))
-    if not column_ms and not pandas_ms:
+        specs += [
+            (rel_col, as_measure(m, rel_hint=f"{rel_col}_m{i}"))
+            for i, m in enumerate(ms)
+        ]
+    if not specs:
         raise ValueError(
             "measures must be non-empty: pass at least one measure per "
             "relevance column, e.g. {'rel': [precision_at(10)]}"
         )
-    return column_ms, pandas_ms
+    return specs
 
 
-def _column_measure_cols(column_ms, rank_col: str):
-    return [m.column(rel_col, rank_col) for rel_col, m in column_ms]
-
-
-def _pandas_measure_frame(
-    ranked: DataFrame,
-    pandas_ms,
-    partition_cols: list[str],
-    rank_col: str,
-) -> DataFrame:
-    """Per-group Series-closure measures via Arrow grouped map: each
-    (query[, step]) group's relevance column, in evaluation order, is
-    handed to the user closure exactly as pandas would. The order is
-    ``rank_col``, the prefix ``row_number`` over ``order_col``, so a
-    struct ``order_col`` sorts as Spark sorts it (field by field, nulls
-    first) and ties resolve as they do for the Column measures."""
-    from pyspark.sql.types import DoubleType
-
-    fields = {f.name: f.dataType for f in ranked.schema.fields}
-    out_schema = StructType(
-        [StructField(c, fields[c]) for c in partition_cols]
-        + [StructField(m.name, DoubleType()) for _, m in pandas_ms]
-    )
-    specs = [(rel_col, m.name, m.fn) for rel_col, m in pandas_ms]
-    part_cols = list(partition_cols)
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(rank_col)
-        row = {c: [pdf[c].iloc[0]] for c in part_cols}
-        for rel_col, name, fn in specs:
-            row[name] = [float(fn(pdf[rel_col].reset_index(drop=True)))]
-        return pd.DataFrame(row)
-
-    return ranked.groupBy(*part_cols).applyInPandas(compute, schema=out_schema)
-
-
-def _augment_for_measures(
-    ranked: DataFrame,
-    measures: dict,
-    partition_cols: list[str],
-    order_col: str,
-) -> DataFrame:
-    """Materialize auxiliary window columns some measures require
-    (``_hits`` running relevant count, ``_ideal_rn`` ideal ordering rank).
-
-    These windows share the partitioning of the prefix-rank window, so
-    Catalyst plans them in the same sort/exchange — no extra shuffle.
-    """
-    needing = {}
-    for rel_col, ms in measures.items():
-        ms = ms if isinstance(ms, (list, tuple)) else [ms]
-        for m in ms:
-            for req in getattr(m, "requires", ()):
-                needing.setdefault(req, set()).add(rel_col)
-    if not needing:
-        return ranked
-    for req, rel_cols in needing.items():
-        if len(rel_cols) > 1:
-            raise NotImplementedError(
-                f"{req}-based measures support a single relevance column "
-                f"per evaluation, got {sorted(rel_cols)}"
+def _sort_cols(col: Column, dtype, nullable: bool, name: str) -> list:
+    """Flat columns whose ascending lexicographic order (NaN last) is
+    Spark's ascending order of ``col``: a struct sorts field by field, and
+    a NULL sorts first at every level. Integral values are coalesced so a
+    NULL does not turn them into floats on the way to pandas."""
+    out = [(~col.isNull()).alias(f"{name}n")] if nullable else []
+    if isinstance(dtype, StructType):
+        for i, f in enumerate(dtype.fields):
+            out += _sort_cols(
+                col[f.name], f.dataType, f.nullable, f"{name}_{i}"
             )
-    if "_hits" in needing:
-        (rel_col,) = needing["_hits"]
-        w = (
-            Window.partitionBy(*partition_cols)
-            .orderBy(F.col(order_col).asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        # running COUNT of relevant (rel > 0), not a graded sum: _hits
-        # feeds AP's precision-at-rank, and precision counts documents —
-        # a graded judgment (rel=2) would otherwise count double (r8
-        # review finding). Identical under binary relevance.
-        ranked = ranked.withColumn(
-            "_hits",
-            F.sum(
-                F.when(F.col(rel_col) > 0, F.lit(1)).otherwise(F.lit(0))
-            ).over(w),
-        )
-    if "_ideal_rn" in needing:
-        (rel_col,) = needing["_ideal_rn"]
-        w = Window.partitionBy(*partition_cols).orderBy(
-            F.col(rel_col).desc(), F.col(order_col).asc()
-        )
-        ranked = ranked.withColumn("_ideal_rn", F.row_number().over(w))
-    return ranked
-
-
-def _measure_groups(
-    ranked: DataFrame,
-    measures: dict,
-    partition_cols: list[str],
-    order_col: str,
-) -> DataFrame:
-    """Every measure per ``partition_cols`` group of a frame whose
-    ``_prefix_rn`` numbers each group's rows by ``order_col``: Column
-    measures in one aggregate, Series-closure measures in one grouped
-    map, joined on the group keys."""
-    column_ms, pandas_ms = _split_measures(measures)
-    out = None
-    if column_ms:
-        grouped: dict = {}
-        for rc, m in column_ms:
-            grouped.setdefault(rc, []).append(m)
-        aug = _augment_for_measures(ranked, grouped, partition_cols, order_col)
-        out = aug.groupBy(*partition_cols).agg(
-            *_column_measure_cols(column_ms, "_prefix_rn")
-        )
-    if pandas_ms:
-        pframe = _pandas_measure_frame(
-            ranked, pandas_ms, partition_cols, "_prefix_rn"
-        )
-        out = pframe if out is None else out.join(pframe, partition_cols)
+    elif isinstance(dtype, IntegralType):
+        out.append(F.coalesce(col, F.lit(0).cast(dtype)).alias(name))
+    else:
+        out.append(col.alias(name))
     return out
 
 
-def _measure_input_cols(measures) -> list:
-    """Extra input columns declared by the measures themselves (e.g.
-    recall_at's total column), for the fail-fast column gates."""
-    cols: list = []
-    for ms in measures.values():
-        ms = ms if isinstance(ms, (list, tuple)) else [ms]
-        for m in ms:
-            cols.extend(getattr(m, "input_cols", ()))
-    return cols
+def _sweep(
+    shards: DataFrame,
+    results: DataFrame,
+    measures: dict,
+    keys: list,
+    steps: range,
+    order_col: str,
+) -> DataFrame:
+    """Every measure at every selection depth in ``steps``: one grouped
+    map per query.
+
+    Results join the selection (shards ranked below the deepest step
+    only), and each query's rows are sorted once by ``order_col``. The
+    prefix at step s is the rows whose shard has ``rank + 1 <= s``, kept
+    in that order; each measure's closure sees it as an ordered Series. A
+    step whose prefix is empty emits no row, and a step that adds no row
+    repeats the previous step's values.
+    """
+    specs = _measure_specs(measures)
+    ensure_has_columns(shards, keys + ["rank"])
+    data_cols = list(
+        dict.fromkeys(
+            [rc for rc, _ in specs] + [c for _, m in specs for c in m.input_cols]
+        )
+    )
+    ensure_has_columns(results, keys + [order_col] + data_cols)
+
+    # results may legitimately carry their own `rank` column (the per-shard
+    # result rank in the SHARD_RESULTS_SCHEMA contract) — alias the
+    # selection rank to avoid the collision
+    sel = shards.where(F.col("rank") < steps.stop - 1).select(
+        *keys, F.col("rank").alias("_sel_rank")
+    )
+    joined = results.join(maybe_broadcast(sel), keys, "inner")
+    key = joined.schema[order_col]
+    sort_cols = _sort_cols(F.col(order_col), key.dataType, key.nullable, "_k")
+    frame = joined.select("query", *sort_cols, "_sel_rank", *data_cols)
+    sort_names = frame.columns[1 : 1 + len(sort_cols)]
+    names = [m.name for _, m in specs]
+    schema = ", ".join(
+        [f"query {joined.schema['query'].dataType.simpleString()}", "step int"]
+        + [f"`{m.name}` {m.type}" for _, m in specs]
+    )
+
+    def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(sort_names, na_position="last", ignore_index=True)
+        entry = pdf["_sel_rank"].to_numpy() + 1
+        query = pdf["query"].iloc[0]
+        cols = {c: pdf[c].to_numpy() for c in data_cols}
+        rows, prev_n, values = [], 0, None
+        for step in steps:
+            mask = entry <= step
+            n = int(mask.sum())
+            if n == 0:
+                continue
+            if n != prev_n:
+                prefix = {c: pd.Series(v[mask]) for c, v in cols.items()}
+                values = [
+                    m.fn(prefix[rc], *(prefix[c] for c in m.input_cols))
+                    for rc, m in specs
+                ]
+                prev_n = n
+            rows.append((query, step, *values))
+        return pd.DataFrame(rows, columns=["query", "step", *names])
+
+    return (
+        frame.groupBy("query")
+        .applyInPandas(sweep, schema=schema)
+        .orderBy("query", "step")
+    )
 
 
 def evaluate_step(
@@ -421,7 +382,8 @@ def evaluate_step(
     with_buckets: bool = False,
     order_col: str = "global_rank",
 ) -> DataFrame:
-    """Effectiveness at a single selection depth ``step``.
+    """Effectiveness at a single selection depth ``step``: the
+    :func:`evaluate` sweep run over that one step.
 
     Parity: reference ``selectivesearch.py:13-29`` — with one deliberate
     divergence, recorded in SURVEY.md §2.4: the reference's
@@ -436,17 +398,9 @@ def evaluate_step(
     query — plus the relevance columns named in ``measures``.
     """
     keys = ["query", "shard"] + (["bucket"] if with_buckets else [])
-    ensure_has_columns(shards, keys + ["rank"])
-    ensure_has_columns(
-        results,
-        keys + [order_col] + list(measures) + _measure_input_cols(measures),
+    return _sweep(
+        shards, results, measures, keys, range(step, step + 1), order_col
     )
-    chosen = shards.where(F.col("rank") < step).select(*keys)
-    hits = results.join(maybe_broadcast(chosen), keys, "leftsemi")
-    w = Window.partitionBy("query").orderBy(F.col(order_col).asc())
-    ranked = hits.withColumn("_prefix_rn", F.row_number().over(w))
-    out = _measure_groups(ranked, measures, ["query"], order_col)
-    return out.withColumn("step", F.lit(step).cast("int"))
 
 
 def evaluate(
@@ -464,25 +418,25 @@ def evaluate(
     quirks: (Q1) ``sort=True`` there is a no-op — here it actually derives
     the selection rank from ``shard_score`` descending (ties by shard[,
     bucket] asc); (Q6) the reference re-runs the whole head+join+agg
-    pipeline once per step, O(steps × |data|) — here each joined result row
-    is exploded to exactly the steps that include it
-    (``sequence(rank+1, num_steps)``), then a single window + aggregation
-    partitioned by (query, step) computes every measure at every depth:
-    **one shuffle instead of num_steps jobs**, identical output contract.
+    pipeline once per step, O(steps × |data|) — here one shuffle groups
+    the joined results by query, each query is sorted once, and a Python
+    sweep walks the steps, growing the prefix by one shard (or bucket)
+    at a time and calling every measure on it. Output: one row per
+    (query, step) with a non-empty prefix — ``query, step`` and the
+    measures in dict order — ordered by query, step.
 
-    Scale: the explode multiplies rows by at most num_steps, but evaluation
-    inputs are per-query top-k lists (thousands of rows per query), so the
-    exploded size is bounded by |results| × steps — a per-query quantity
-    that AQE splits/coalesces well; nothing here touches the driver.
+    Scale: every joined row is shuffled once, and a query's rows must fit
+    one Python worker (evaluation inputs are per-query top-k lists,
+    thousands of rows). The sweep runs one task per query group, so its
+    parallelism is bounded by the query count; nothing touches the driver.
 
     ``order_col`` is only ever used as a SORT key (never arithmetically),
     so it may be a composite ``struct`` column (e.g.
-    ``F.struct(-score, docid)``) instead of a precomputed integer rank.
-    Prefer that at scale: materializing an integer ``global_rank`` via
-    ``row_number`` over ``Window.partitionBy("query")`` caps that window's
-    parallelism at the query count, while the struct key costs nothing —
-    the per-(query, step) prefix windows here sort it natively, and
-    Series-closure measures see their rows in that same window order.
+    ``F.struct(-score, docid)``) instead of a precomputed integer rank:
+    its fields are flattened into sort columns and each query sorts them
+    as Spark sorts the struct (field by field, NULLs first). Prefer that
+    at scale: materializing an integer ``global_rank`` via ``row_number``
+    over ``Window.partitionBy("query")`` costs a whole window stage.
     """
     keys = ["query", "shard"] + (["bucket"] if num_buckets is not None else [])
     num_steps = num_shards if num_buckets is None else num_shards * num_buckets
@@ -491,30 +445,6 @@ def evaluate(
         shards = rank_selection(
             shards, "shard_score", ("query",), tuple(keys[1:]), "rank"
         )
-    ensure_has_columns(shards, keys + ["rank"])
-    ensure_has_columns(
-        results,
-        keys + [order_col] + list(measures) + _measure_input_cols(measures),
+    return _sweep(
+        shards, results, measures, keys, range(1, num_steps + 1), order_col
     )
-
-    # results may legitimately carry their own `rank` column (the per-shard
-    # result rank in the SHARD_RESULTS_SCHEMA contract) — alias the selection
-    # rank to avoid the collision. Shards ranked beyond the sweep depth are
-    # dropped BEFORE the explode: sequence(start, stop) counts *down* when
-    # start > stop, so without the filter a rank-7 shard in a 5-step sweep
-    # would emit steps [8,7,6,5] — phantom steps plus pollution of step 5.
-    sel = (
-        shards.where(F.col("rank") < num_steps)
-        .select(*keys, F.col("rank").alias("_sel_rank"))
-    )
-    joined = results.join(maybe_broadcast(sel), keys, "inner")
-    exploded = joined.withColumn(
-        "step",
-        F.explode(
-            F.sequence(F.col("_sel_rank").cast("int") + 1, F.lit(int(num_steps)))
-        ),
-    )
-    w = Window.partitionBy("query", "step").orderBy(F.col(order_col).asc())
-    ranked = exploded.withColumn("_prefix_rn", F.row_number().over(w))
-    out = _measure_groups(ranked, measures, ["query", "step"], order_col)
-    return out.orderBy("query", "step")

@@ -169,21 +169,40 @@ def test_decayed_buckets_properties():
 
 def _evaluate_model(shard_ranks, result_rows, k, num_steps):
     """Independent model of the evaluation sweep: at step s, results from
-    shards ranked < s, ordered by global_rank; P@k = mean rel over first
-    min(k, n) rows."""
+    shards ranked < s, ordered by the key (a, gr) as Spark orders a
+    struct (NULL a first). Relevance may be NULL (an unjudged result).
+    P@k = mean non-NULL rel over the first k rows (NULL when none);
+    AP@k divides by every relevant (rel > 0) row in the prefix; nDCG@k's
+    ideal order is rel descending with NULL last."""
     out = {}
-    queries = {q for (q, _, _, _) in result_rows} | {q for (q, _) in shard_ranks}
+    queries = {r[0] for r in result_rows} | {q for (q, _) in shard_ranks}
     for q in queries:
         for step in range(1, num_steps + 1):
             hits = sorted(
-                (gr, rel)
-                for (qq, s, gr, rel) in result_rows
+                ((a is not None, a or 0, gr), rel)
+                for (qq, s, a, gr, rel) in result_rows
                 if qq == q and shard_ranks.get((qq, s), 10**9) < step
             )
             if not hits:
                 continue  # groupBy emits no row for empty selections
-            prefix = [rel for (_, rel) in hits[:k]]
-            out[(q, step)] = (sum(prefix) / len(prefix), len(hits))
+            rels = [rel for (_, rel) in hits]
+            judged = [r for r in rels[:k] if r is not None]
+            p = sum(judged) / len(judged) if judged else None
+            relevant = [r is not None and r > 0 for r in rels]
+            ap, seen = 0.0, 0
+            for i, hit in enumerate(relevant[:k]):
+                seen += hit
+                ap += seen / (i + 1) if hit else 0.0
+            ap = ap / sum(relevant) if any(relevant) else 0.0
+
+            def dcg(rs):
+                return sum(r / math.log2(i + 2)
+                           for i, r in enumerate(rs[:k]) if r is not None)
+
+            ideal = sorted(rels, key=lambda r: (r is None, -(r or 0)))
+            idcg = dcg(ideal)
+            ndcg = dcg(rels) / idcg if idcg > 0 else 0.0
+            out[(q, step)] = (p, len(hits), ap, ndcg)
     return out
 
 
@@ -203,8 +222,9 @@ def eval_scenario(draw):
         for i in range(n):
             gr += 1
             rows.append(
-                (q, draw(st.integers(0, n_shards - 1)), gr,
-                 draw(st.integers(0, 1)))
+                (q, draw(st.integers(0, n_shards - 1)),
+                 draw(st.sampled_from([None, 0, 1])), gr,
+                 draw(st.sampled_from([None, 0, 1, 2])))
             )
     num_steps = draw(st.integers(1, n_shards))
     return shard_ranks, rows, num_steps
@@ -215,7 +235,12 @@ def eval_scenario(draw):
 def test_evaluate_sweep_matches_model(spark, sc, k):
     from pyspark.sql import functions as F
 
-    from dataproc_spark.measures import num_retrieved, precision_at
+    from dataproc_spark.measures import (
+        average_precision,
+        ndcg_at,
+        num_retrieved,
+        precision_at,
+    )
     from dataproc_spark.selective import evaluate
 
     shard_ranks, rows, num_steps = sc
@@ -223,25 +248,28 @@ def test_evaluate_sweep_matches_model(spark, sc, k):
         [(q, s, r) for (q, s), r in shard_ranks.items()],
         schema="query long, shard long, rank long",
     )
-    if rows:
-        results = spark.createDataFrame(
-            rows, schema="query long, shard long, global_rank long, rel int"
-        )
-    else:
-        results = spark.createDataFrame(
-            [], schema="query long, shard long, global_rank long, rel int"
-        )
+    # the order key is a struct whose first field may be NULL; `gr`
+    # makes the order total
+    results = spark.createDataFrame(
+        rows, schema="query long, shard long, a long, gr long, rel int"
+    ).select("query", "shard", F.struct("a", "gr").alias("key"), "rel")
     out = evaluate(
         shards, results,
-        {"rel": [precision_at(k, name="p"), num_retrieved()]},
-        num_shards=num_steps,
+        {"rel": [precision_at(k, name="p"), num_retrieved(),
+                 average_precision(k, name="ap"), ndcg_at(k, name="ndcg")]},
+        num_shards=num_steps, order_col="key",
     )
-    got = {(r.query, r.step): (r.p, r.num_ret) for r in out.collect()}
+    got = {(r.query, r.step): (r.p, r.num_ret, r.ap, r.ndcg)
+           for r in out.collect()}
     want = _evaluate_model(shard_ranks, rows, k, num_steps)
     assert set(got) == set(want)
     for key in want:
-        assert got[key][1] == want[key][1], (key, got[key], want[key])
-        assert abs(got[key][0] - want[key][0]) < 1e-12, (key, got[key], want[key])
+        g, w = got[key], want[key]
+        assert g[1] == w[1], (key, g, w)
+        assert (g[0] is None) == (w[0] is None), (key, g, w)
+        for gv, wv in zip(g[:1] + g[2:], w[:1] + w[2:]):
+            if wv is not None:
+                assert abs(gv - wv) < 1e-12, (key, g, w)
 
 
 # ---------------------------------------------------------------------------

@@ -250,22 +250,23 @@ def test_evaluate_sort_derives_rank(eval_inputs, spark):
     assert (0, 1, 1.0) in got and (1, 1, 0.5) in got
 
 
-def test_pandas_measure_closure_matches_column_measure(eval_inputs):
-    """The reference's Series-closure measure style must work via the
-    applyInPandas fallback and agree with the Column formulation."""
-    from dataproc_spark.measures import PandasMeasure
+def test_reference_closure_matches_precision_at(eval_inputs):
+    """The reference's measure style — a closure over the ordered
+    relevance Series, ``s[:k].sum() / s[:k].count()`` — gives exactly
+    precision_at(k) at every step."""
+    from dataproc_spark.measures import Measure
 
     shards, results = eval_inputs
 
     def p_at_2(s):
         return s[:2].sum() / s[:2].count()
 
-    mixed = {"relevant": [precision_at(2), PandasMeasure("p2_closure", p_at_2)]}
-    out = evaluate(shards, results, mixed, num_shards=2)
+    both = {"relevant": [precision_at(2), Measure("p2_closure", p_at_2)]}
+    out = evaluate(shards, results, both, num_shards=2)
     rows = out.collect()
     assert len(rows) == 4
     for r in rows:
-        assert abs(r["p_2"] - r["p2_closure"]) < 1e-12
+        assert r["p_2"] == r["p2_closure"]
 
 
 def test_plain_callable_measure_autowraps(eval_inputs):
@@ -332,3 +333,64 @@ def test_struct_order_key_for_pandas_measures(eval_inputs):
     one = evaluate_step(shards, results, measures, step=2, order_col="gkey")
     assert {r.query: (r.p_2, r.p_at_2) for r in one.collect()} == {
         0: (0.0, 0.0), 1: (1.0, 1.0)}
+
+
+def test_measures_over_several_relevance_columns(spark):
+    """One evaluate may score several relevance columns with measures
+    that need each prefix's running hits and ideal order; its values
+    equal one run per column."""
+    from dataproc_spark.measures import average_precision, ndcg_at
+
+    shards = spark.createDataFrame(
+        [(0, 0, 0), (0, 1, 1), (1, 1, 0), (1, 0, 1)],
+        schema="query long, shard long, rank long",
+    )
+    rows = [
+        # query, shard, global_rank, rel, grade
+        (0, 0, 1, 1, 0), (0, 1, 2, 0, 2), (0, 0, 3, 1, 1), (0, 1, 4, 1, 0),
+        (0, 0, 5, 0, 3), (1, 1, 1, 0, 1), (1, 0, 2, 1, 0), (1, 1, 3, 1, 2),
+        (1, 0, 4, 0, 0),
+    ]
+    results = spark.createDataFrame(
+        rows, "query long, shard long, global_rank long, rel int, grade int"
+    )
+    by_rel = [average_precision(), ndcg_at(5)]
+    by_grade = [average_precision(name="ap_g")]
+    both = evaluate(shards, results, {"rel": by_rel, "grade": by_grade},
+                    num_shards=2)
+    assert both.columns == ["query", "step", "ap", "ndcg_5", "ap_g"]
+    rel = evaluate(shards, results, {"rel": by_rel}, num_shards=2)
+    grade = evaluate(shards, results, {"grade": by_grade}, num_shards=2)
+    want = {
+        (r.query, r.step): (r.ap, r.ndcg_5, g.ap_g)
+        for r, g in zip(rel.collect(), grade.collect())
+    }
+    got = {(r.query, r.step): (r.ap, r.ndcg_5, r.ap_g) for r in both.collect()}
+    assert got == want
+    assert len(got) == 4 and len({v for v in got.values()}) > 1
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan of ``df`` after running it (AQE's
+    final plan, without its initial-plan copy)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_evaluate_plans_are_one_sweep(eval_inputs):
+    """evaluate and evaluate_step run one grouped-map sweep per query:
+    no explode of rows into steps (Generate) and no prefix window."""
+    from dataproc_spark.measures import average_precision, ndcg_at
+
+    shards, results = eval_inputs
+    measures = {"relevant": [precision_at(2), average_precision(),
+                             ndcg_at(2), num_retrieved()]}
+    for df in (evaluate(shards, results, measures, num_shards=2),
+               evaluate_step(shards, results, measures, step=2)):
+        plan = _final_plan(df)
+        assert "Generate" not in plan, plan
+        assert "Window" not in plan, plan
+        assert plan.count("FlatMapGroupsInPandas") == 1, plan
